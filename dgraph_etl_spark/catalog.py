@@ -50,86 +50,6 @@ def table_path(sf_dir: str, name: str) -> str:
 # special case and its queries are watermark-pruned scans anyway.
 _COMPACT_TABLES = {"lineitem", "orders", "documents", "embeddings"}
 _COMPACT_MIN_ROWS = 20_000
-_LAYOUT_ROOT = os.path.join(
-    os.environ.get("TMPDIR", "/tmp"), "dgraph_etl_layout"
-)
-
-
-def source_tag(sf_dir: str) -> str:
-    """The ONE copy of the staged-artifact tag rule: a catalog-safe
-    basename plus a hash of the ABSOLUTE fixture dir, so eviction
-    scope always equals cache scope (graph_traversal._cached_edges'
-    lesson: a basename-only tag let two fixtures with the same leaf
-    dir name evict each other's live staged copies). Shared by the
-    layout compactor, the bucketed-table suites, and the persisted
-    IVF index -- three hand-kept copies of this rule would drift.
-
-    NOTE: changing this naming orphans staged dirs built under any
-    previous scheme (nothing sweeps them) -- acceptable once per
-    scheme change, since /tmp staging is scratch; never change it
-    casually."""
-    import hashlib
-    import re
-
-    ident = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
-    return f"{base}_{ident}"
-
-
-# Grace period before a superseded staged generation is rmtree'd:
-# Spark scans are lazy, so a sibling process may still be mid-scan on
-# the previous generation when this one lands. Deleting only dirs
-# untouched for this long lets in-flight readers finish; the stale
-# copy is then collected by a later load. 15 min covers any local
-# query by orders of magnitude.
-_EVICT_GRACE_SECONDS = 900
-
-
-def _evict_stale_generations(
-    root: str,
-    prefix: str,
-    keep_prefix: str | None = None,
-    keep_name: str | None = None,
-) -> None:
-    """Delete superseded staged-dir generations under ``root``: dirs
-    matching ``prefix`` but not the live generation -- ``keep_prefix``
-    when the live dir name carries a trailing delimiter, ``keep_name``
-    for an EXACT dir name (use this when the name has no trailing
-    boundary: a stale '..._500' string-extends a live '..._50' prefix
-    and would be wrongly retained). Skips in-progress ``.tmp.`` dirs
-    and ``.lock`` files, and is age-gated on the dir's own mtime so a
-    concurrent reader of the previous generation is never pulled out
-    from under its scan."""
-    import shutil
-    import time
-
-    if (keep_prefix is None) == (keep_name is None):
-        raise ValueError("pass exactly one of keep_prefix / keep_name")
-    now = time.time()
-    try:
-        sibs = os.listdir(root)
-    except OSError:
-        return
-    for sib in sibs:
-        p = os.path.join(root, sib)
-        live = (
-            sib.startswith(keep_prefix)
-            if keep_prefix is not None
-            else sib == keep_name
-        )
-        if (
-            sib.startswith(prefix)
-            and not live
-            and ".tmp." not in sib
-            and not sib.endswith(".lock")
-            and os.path.isdir(p)
-        ):
-            try:
-                if now - os.stat(p).st_mtime < _EVICT_GRACE_SECONDS:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def _compacted_source(spark: SparkSession, sf_dir: str, name: str) -> str | None:
@@ -142,6 +62,8 @@ def _compacted_source(spark: SparkSession, sf_dir: str, name: str) -> str | None
     try:
         import pyarrow.parquet as pq
 
+        from .staging import stage
+
         meta = pq.ParquetFile(src).metadata
         n_cores = spark.sparkContext.defaultParallelism
         # documents/embeddings carry heavy PER-ROW map work (shingle
@@ -152,51 +74,18 @@ def _compacted_source(spark: SparkSession, sf_dir: str, name: str) -> str | None
             return None
         if meta.num_row_groups >= max(2, n_cores // 2):
             return None  # already split-friendly
-        st = os.stat(src)
-        # path-hashed tag (source_tag): eviction scope == cache scope
-        tag = source_tag(sf_dir)
-        key = f"{st.st_mtime_ns}_{st.st_size}"
-        dest = os.path.join(_LAYOUT_ROOT, f"{tag}_{name}_{key}_{n_cores}")
-        if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-            # Concurrent sessions (bench + pytest, pytest-xdist) build
-            # under the flock discipline every stager in this repo
-            # uses (streaming/core._stage_atomic has the full
-            # rationale: kernel-released on crash, no unlink, no
-            # break-the-lock branch). Serializing here also means a
-            # loser WAITS for the winner's copy instead of running a
-            # duplicate full-table Spark job and discarding it at the
-            # rename -- the pre-lock protocol's documented waste.
-            import fcntl
-            import shutil
-            import uuid
-
-            os.makedirs(_LAYOUT_ROOT, exist_ok=True)
-            fd = os.open(f"{dest}.lock", os.O_CREAT | os.O_RDWR, 0o644)
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-                    tmp = f"{dest}.tmp.{uuid.uuid4().hex[:8]}"
-                    spark.read.parquet(src).repartition(n_cores).write.mode(
-                        "overwrite"
-                    ).parquet(tmp)
-                    os.rename(tmp, dest)
-            finally:
-                os.close(fd)
-        # generational eviction (the discipline of
-        # traverse._CACHE_GENERATIONS), on EVERY load -- not only in
-        # the build branch, or a generation still inside the grace
-        # window at its successor's build time would never be
-        # collected: copies of this table whose embedded source
-        # identity no longer matches the CURRENT file can only serve
-        # a fixture that has since been regenerated. AGE-GATED: only
-        # generations older than the grace period go -- a concurrent
-        # process may still be lazily scanning the previous generation
-        # (Spark reads are lazy; a rmtree mid-scan is a
-        # FileNotFoundException in someone else's query).
-        _evict_stale_generations(
-            _LAYOUT_ROOT, f"{tag}_{name}_", f"{tag}_{name}_{key}_"
+        # a loser of the build race WAITS for the winner's copy instead
+        # of running a duplicate full-table Spark job (staging.publish)
+        return stage(
+            "layout",
+            sf_dir,
+            (name,),
+            lambda tmp: spark.read.parquet(src)
+            .repartition(n_cores)
+            .write.mode("overwrite")
+            .parquet(tmp),
+            suffix=f"_{name}_{n_cores}",
         )
-        return dest
     except Exception:
         return None  # any surprise -> fall back to the raw source
 

@@ -25,6 +25,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..staging import is_published, publish
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -928,33 +930,16 @@ def build_ivf_index(emb: DataFrame, path: str) -> None:
     never opens them. Build once, probe many: the index is a plain
     partitioned table, no sidecar format.
 
-    Concurrent builders race-safely: each writes a unique temp dir and
-    atomically renames into ``path`` (first rename wins; losers discard),
-    so a reader never observes a half-written index with _SUCCESS."""
-    import os
-    import shutil
-    import uuid
+    Published through staging.publish: concurrent builders serialize on
+    its lock, and a reader never observes a half-written index."""
+    publish(path, lambda tmp: write_ivf_index(emb, tmp))
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-        emb.write.mode("overwrite").partitionBy("label").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                raise
-        # a rebuild at the same path (dir was removed) must not serve a
-        # stale cached file listing or centroid table in this process
-        _OPEN_INDEXES.pop(
-            (id(emb.sparkSession), os.path.abspath(path)), None
-        )
-        for k in [
-            k
-            for k in _PERSISTED_CENTROIDS
-            if k[0] == id(emb.sparkSession) and k[1] == os.path.abspath(path)
-        ]:
-            _evict_centroid(k)
+
+def write_ivf_index(emb: DataFrame, out: str) -> None:
+    """The label-cell index build into ``out`` (build_ivf_index's
+    build step; c04_ivf_persisted stages it under its source key)."""
+    emb.write.mode("overwrite").partitionBy("label").parquet(out)
+    _forget_rebuilt_indexes()
 
 
 def ivf_persisted_topk(
@@ -1739,44 +1724,30 @@ def build_ivf_kmeans_index(
     vec_col: str = "embedding",
 ):
     """One-time c51-scale index build: sampled codebook -> Arrow
-    assignment -> corpus persisted PARTITIONED BY cell (same
-    atomic-rename protocol as build_ivf_index). The codebook is saved
+    assignment -> corpus persisted PARTITIONED BY cell (published
+    through staging.publish, like build_ivf_index). The codebook is saved
     next to the partitions (centroids.npy) so probing never retrains.
     Returns the codebook."""
-    import os
-    import shutil
-    import uuid
-
     import numpy as np
 
-    done = os.path.join(path, "_SUCCESS")
-    cb_path = os.path.join(path, "centroids.npy")
-    if os.path.exists(done) and os.path.exists(cb_path):
-        return np.load(cb_path)
-    codebook = sampled_codebook(emb, ncells, sample_size, n_iter, vec_col)
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    # repartition by cell before the partitioned write: each cell's rows
-    # land in exactly one task, so each cell directory holds ONE file.
-    # Without it every writer task emits a file per cell it touches --
-    # measured 31 x 2,236 ~ 70k small files at 5M vectors, and the
-    # per-query partition LISTING of those (a 2,236-task discovery job)
-    # cost more than the probe itself (~3.4 s flat across nprobe).
-    # The small-files problem is the classic partitioned-table killer;
-    # compaction at build time is the fix.
-    assign_cells_arrow(emb, codebook, vec_col).repartition(
-        int(codebook.shape[0]), "cell"
-    ).write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    np.save(os.path.join(tmp, "centroids.npy"), codebook)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not (os.path.exists(done) and os.path.exists(cb_path)):
-            raise
-    # an in-process rebuild at the same path must not serve the old
-    # file listing: evict any opened-index cache entry for this path
-    _OPEN_INDEXES.pop((id(spark), os.path.abspath(path)), None)
-    return np.load(cb_path)
+    def build(tmp: str) -> None:
+        codebook = sampled_codebook(emb, ncells, sample_size, n_iter, vec_col)
+        # repartition by cell before the partitioned write: each cell's rows
+        # land in exactly one task, so each cell directory holds ONE file.
+        # Without it every writer task emits a file per cell it touches --
+        # measured 31 x 2,236 ~ 70k small files at 5M vectors, and the
+        # per-query partition LISTING of those (a 2,236-task discovery job)
+        # cost more than the probe itself (~3.4 s flat across nprobe).
+        # The small-files problem is the classic partitioned-table killer;
+        # compaction at build time is the fix.
+        assign_cells_arrow(emb, codebook, vec_col).repartition(
+            int(codebook.shape[0]), "cell"
+        ).write.mode("overwrite").partitionBy("cell").parquet(tmp)
+        np.save(os.path.join(tmp, "centroids.npy"), codebook)
+        _forget_rebuilt_indexes()
+
+    publish(path, build)
+    return np.load(os.path.join(path, "centroids.npy"))
 
 
 # Opened-index cache: serving opens an index ONCE and probes many
@@ -1816,6 +1787,20 @@ def _evict_centroid(key) -> None:
             df.unpersist(blocking=False)
         except Exception:
             pass  # session died between the check and the call
+
+
+def _forget_rebuilt_indexes() -> None:
+    """Drop the opened-index and centroid cache entries of every index
+    dir that is not published. Every index build calls this, and a
+    build only runs while its own path is unpublished (staging.publish),
+    so a rebuild at a cached path never serves the old file listing or
+    centroid table in this process."""
+    for k in list(_OPEN_INDEXES):
+        if not is_published(k[1]):
+            _OPEN_INDEXES.pop(k, None)
+    for k in list(_PERSISTED_CENTROIDS):
+        if not is_published(k[1]):
+            _evict_centroid(k)
 
 
 def open_ivf_kmeans_index(spark, path: str):
@@ -1892,9 +1877,6 @@ def build_ivfpq_index(
     Codebooks are saved beside the partitions (pq_codebooks.npy,
     centroids.npy when ncells > 1), so probing never retrains.
     Returns (coarse_codebook | None, pq_codebooks)."""
-    import shutil
-    import uuid
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -1906,90 +1888,81 @@ def build_ivfpq_index(
         StructType,
     )
 
-    done = os.path.join(path, "_SUCCESS")
-    pq_path = os.path.join(path, "_pq_codebooks.npy")
-    cb_path = os.path.join(path, "_centroids.npy")
-    if os.path.exists(done) and os.path.exists(pq_path):
-        coarse = np.load(cb_path) if os.path.exists(cb_path) else None
-        return coarse, np.load(pq_path)
-
-    x = _det_sample_rows(emb, sample_size, vec_col)
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    sd = dim // m_sub
-    coarse = _lloyd_np(x, ncells, n_iter) if ncells > 1 else None
-    pq = np.stack(
-        [
-            _lloyd_np(
-                np.ascontiguousarray(x[:, m * sd : (m + 1) * sd]),
-                k_codes,
-                n_iter,
-            )
-            for m in range(m_sub)
-        ]
-    )
-
-    bc = spark.sparkContext.broadcast((coarse, pq))
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("codes", ArrayType(ShortType())),
-            StructField("cell", IntegerType()),
-        ]
-    )
-
-    def encode(batches):
-        co, cbs = bc.value
-        co2 = (co * co).sum(axis=1) if co is not None else None
-        cb2 = [(cb * cb).sum(axis=1) for cb in cbs]
-        for pdf in batches:
-            mvec = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cell = (
-                np.argmin(
-                    co2[None, :] - 2.0 * (mvec @ co.T), axis=1
-                ).astype(np.int32)
-                if co is not None
-                else np.zeros(len(mvec), dtype=np.int32)
-            )
-            codes = np.empty((len(mvec), len(cbs)), dtype=np.int16)
-            for m, cb in enumerate(cbs):
-                sub = mvec[:, m * sd : (m + 1) * sd]
-                codes[:, m] = np.argmin(
-                    cb2[m][None, :] - 2.0 * (sub @ cb.T), axis=1
+    def build(tmp: str) -> None:
+        x = _det_sample_rows(emb, sample_size, vec_col)
+        dim = x.shape[1]
+        if dim % m_sub:
+            raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+        sd = dim // m_sub
+        coarse = _lloyd_np(x, ncells, n_iter) if ncells > 1 else None
+        pq = np.stack(
+            [
+                _lloyd_np(
+                    np.ascontiguousarray(x[:, m * sd : (m + 1) * sd]),
+                    k_codes,
+                    n_iter,
                 )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "codes": list(codes),
-                    "cell": cell,
-                }
-            )
+                for m in range(m_sub)
+            ]
+        )
 
-    encoded = emb.select("vec_id", vec_col).mapInPandas(encode, schema)
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    if coarse is not None:
-        # one compacted file per cell -- same 70k-small-files lesson as
-        # build_ivf_kmeans_index
-        encoded.repartition(int(coarse.shape[0]), "cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(tmp)
-    else:
-        encoded.drop("cell").write.mode("overwrite").parquet(tmp)
-    # underscore prefix: Spark/Hadoop file listing skips _-prefixed
-    # files, so the sidecars never surface as data files (the flat PQ
-    # layout has no partition dirs to hide them behind)
-    np.save(os.path.join(tmp, "_pq_codebooks.npy"), pq)
-    if coarse is not None:
-        np.save(os.path.join(tmp, "_centroids.npy"), coarse)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not (os.path.exists(done) and os.path.exists(pq_path)):
-            raise
-    _OPEN_INDEXES.pop((id(spark), os.path.abspath(path)), None)
-    return coarse, pq
+        bc = spark.sparkContext.broadcast((coarse, pq))
+        schema = StructType(
+            [
+                StructField("vec_id", LongType()),
+                StructField("codes", ArrayType(ShortType())),
+                StructField("cell", IntegerType()),
+            ]
+        )
+
+        def encode(batches):
+            co, cbs = bc.value
+            co2 = (co * co).sum(axis=1) if co is not None else None
+            cb2 = [(cb * cb).sum(axis=1) for cb in cbs]
+            for pdf in batches:
+                mvec = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                cell = (
+                    np.argmin(
+                        co2[None, :] - 2.0 * (mvec @ co.T), axis=1
+                    ).astype(np.int32)
+                    if co is not None
+                    else np.zeros(len(mvec), dtype=np.int32)
+                )
+                codes = np.empty((len(mvec), len(cbs)), dtype=np.int16)
+                for m, cb in enumerate(cbs):
+                    sub = mvec[:, m * sd : (m + 1) * sd]
+                    codes[:, m] = np.argmin(
+                        cb2[m][None, :] - 2.0 * (sub @ cb.T), axis=1
+                    )
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].values,
+                        "codes": list(codes),
+                        "cell": cell,
+                    }
+                )
+
+        encoded = emb.select("vec_id", vec_col).mapInPandas(encode, schema)
+        if coarse is not None:
+            # one compacted file per cell -- same 70k-small-files lesson as
+            # build_ivf_kmeans_index
+            encoded.repartition(int(coarse.shape[0]), "cell").write.mode(
+                "overwrite"
+            ).partitionBy("cell").parquet(tmp)
+        else:
+            encoded.drop("cell").write.mode("overwrite").parquet(tmp)
+        # underscore prefix: Spark/Hadoop file listing skips _-prefixed
+        # files, so the sidecars never surface as data files (the flat PQ
+        # layout has no partition dirs to hide them behind)
+        np.save(os.path.join(tmp, "_pq_codebooks.npy"), pq)
+        if coarse is not None:
+            np.save(os.path.join(tmp, "_centroids.npy"), coarse)
+        _forget_rebuilt_indexes()
+
+    publish(path, build)
+    cb_path = os.path.join(path, "_centroids.npy")
+    coarse = np.load(cb_path) if os.path.exists(cb_path) else None
+    return coarse, np.load(os.path.join(path, "_pq_codebooks.npy"))
 
 
 def ivfpq_scale_topk(

@@ -241,7 +241,7 @@ def merge_max_into(
             # a failed write (executor OOM, cancelled job, disk full)
             # must not strand partial parquet inside the store root --
             # _versions() ignores .tmp-* so nothing else ever reclaims
-            # it (streaming/core._stage_atomic's rule)
+            # it (staging.publish's rule)
             shutil.rmtree(tmp, ignore_errors=True)
             raise
         dest = os.path.join(root, f"v{n:05d}")

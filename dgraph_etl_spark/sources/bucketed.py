@@ -14,14 +14,16 @@ the engine owns the layout.
 Spark bucketing needs a catalog table (``saveAsTable``); with the
 default in-memory catalog the metadata lives in the SharedState
 external catalog every session on the SparkContext shares (it dies
-with the process), and the data is an ordinary parquet directory at
-``path``, so nothing persists outside scratch space. Bucket counts
-must match on both sides for the exchange to be elided.
+with the process), and the data is an ordinary parquet directory
+under a per-process scratch root that is removed at interpreter exit.
+Bucket counts must match on both sides for the exchange to be elided.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import threading
 
@@ -45,6 +47,26 @@ _CREATE_LOCKS_GUARD = threading.Lock()
 def _create_lock(name: str) -> threading.Lock:
     with _CREATE_LOCKS_GUARD:
         return _CREATE_LOCKS.setdefault(name, threading.Lock())
+
+
+# Scratch roots this process created. Only this process's in-memory
+# catalog can name their tables, so their files are removed at
+# interpreter exit; a forked child inherits the handler, hence the
+# pid-keyed prefix check.
+_ROOTS: set[str] = set()
+
+
+@atexit.register
+def _remove_roots() -> None:
+    for root in _ROOTS:
+        if root.startswith(_root_prefix()):
+            shutil.rmtree(root, ignore_errors=True)
+
+
+def _root_prefix() -> str:
+    return os.path.join(
+        tempfile.gettempdir(), f"dgraph_etl_bucketed_{os.getpid()}_"
+    )
 
 
 def bucketed_table(
@@ -79,10 +101,8 @@ def bucketed_table(
             # shared (SharedState), but each creator stages its data
             # under its own root so a dying session's half-written
             # files can never be what a fresh creation renames over
-            root = os.path.join(
-                tempfile.gettempdir(),
-                f"dgraph_etl_bucketed_{os.getpid()}_{id(spark)}",
-            )
+            root = f"{_root_prefix()}{id(spark)}"
+            _ROOTS.add(root)
             path = os.path.join(root, name)
             (
                 # repartition by the bucket key first: each bucket's rows
@@ -98,14 +118,12 @@ def bucketed_table(
                 .saveAsTable(name)
             )
             if version is not None:
-                # generational eviction (catalog._compacted_source's
+                # generational eviction (staging.stage's
                 # discipline): superseded versions of this table under
                 # OUR scratch root can only serve a source that has
                 # since been regenerated -- drop their catalog entries
                 # and files, or every fixture refresh strands a
                 # full-size bucketed copy per round
-                import shutil
-
                 prefix = f"{base}_v"
                 for sib in os.listdir(root) if os.path.isdir(root) else []:
                     if sib.startswith(prefix) and sib != name:

@@ -58,13 +58,12 @@ def stage_derby_table(spark: SparkSession, sf_dir: str, table: str) -> str:
     the B3 scan is certified against a REAL database rather than a
     mocked reader.
 
-    Staging runs under the repo's flock'd atomic stager
-    (streaming/core._stage_atomic): content-keyed tag (source parquet
-    mtime+size), built in a tmp sibling, marker written last, renamed
-    into place -- and because a rename must move a CLOSED database,
-    the staging copy is explicitly de-booted via Derby's
-    ``;shutdown=true`` URL before the stager publishes. The flock
-    means a concurrent cold-start WAITS for the winner instead of
+    Staging runs under the repo's one stager (staging.stage): keyed by
+    the source parquet's identity, built in a tmp sibling, marker
+    written last, renamed into place -- and because a rename must move
+    a CLOSED database, the staging copy is explicitly de-booted via
+    Derby's ``;shutdown=true`` URL before the stager publishes. The
+    flock means a concurrent cold-start WAITS for the winner instead of
     bulk-inserting the whole table row-by-row over JDBC a second time
     (the single most expensive staging step in the repo). Embedded
     Derby is single-JVM: the staged database serves one process at a
@@ -74,16 +73,7 @@ def stage_derby_table(spark: SparkSession, sf_dir: str, table: str) -> str:
     import os
 
     from ..catalog import table_path
-    from ..streaming.core import _stage_atomic
-
-    st = os.stat(table_path(sf_dir, table))
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), f"dgraph_etl_derby_{tag}_{table}")
+    from ..staging import stage
 
     def _build(tmp: str) -> None:
         # Derby creates the db dir itself, so it nests INSIDE the
@@ -103,7 +93,7 @@ def stage_derby_table(spark: SparkSession, sf_dir: str, table: str) -> str:
             if "08006" not in str(ex):
                 raise
 
-    _stage_atomic(d, _build)
+    d = stage("derby", sf_dir, (table,), _build, suffix=f"_{table}")
     return f"jdbc:derby:{os.path.join(d, 'db')}"
 
 

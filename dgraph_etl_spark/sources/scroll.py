@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 SCROLL_SCHEMA = "last_update_us BIGINT, _id STRING, _source STRING"
 PAGE_SIZE = 5_000  # the reference's scroll size (elastic.go:60)
@@ -54,90 +53,82 @@ def stage_scroll_pages(
     of ``page_size`` rows sorted ascending by last_update (the
     reference's scroll order), plus ``manifest.json`` with per-page
     (min, max, n) of the sort key. Idempotent per source identity
-    (mtime+size tag, same convention as the other staged sources)."""
-    from ..catalog import register_views, table_path
-
-    st = os.stat(table_path(sf_dir, "events"))
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{st.st_mtime_ns}_{st.st_size}_{page_size}"
-    )
-    d = os.path.join(tempfile.gettempdir(), f"dgraph_etl_scroll_{tag}")
-    manifest_path = os.path.join(d, "manifest.json")
-    if os.path.exists(manifest_path):
-        return d
-    register_views(spark, sf_dir)
+    (staging.stage)."""
     import glob
     import shutil
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    # a null ts must die LOUDLY at stage time: F.to_json drops null
-    # struct fields (spark.sql.jsonGenerator.ignoreNullFields default),
-    # so a null lu would stage a page line with no "_lu" key -- a
-    # poisoned page that KeyErrors on every later scan and is invisible
-    # to the manifest's min/max pruning bounds. Per-row raise_error
-    # keeps the check distributed and free when no nulls exist.
-    _lu = F.unix_micros("ts")
-    hits = spark.table("events").select(
-        F.when(
-            _lu.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit("scroll stager: null ts for event_id="),
-                    F.col("event_id").cast("string"),
-                )
-            ).cast("long"),
-        )
-        .otherwise(_lu)
-        .alias("lu"),
-        # same poisoned-page hazard as lu: a null _id would be dropped
-        # from the staged json line and KeyError every later scan
-        F.when(
-            F.col("event_id").isNull(),
-            F.raise_error(F.lit("scroll stager: null event_id")).cast(
-                "string"
-            ),
-        )
-        .otherwise(F.col("event_id").cast("string"))
-        .alias("_id"),
-        F.to_json(
-            F.struct(
-                F.unix_micros("ts").alias("last_update"),
-                F.col("user_id").cast("string").alias("from_person_id"),
-                (F.col("event_id") % 50).cast("string").alias("to_person_id"),
-                F.struct(
-                    # ROUND before the int cast: Spark truncates
-                    # double->int while DuckDB rounds (see views.py)
-                    F.round(F.col("value") * 100, 0)
-                    .cast("int")
-                    .alias("raw_score_in"),
-                    F.round(F.col("value") * 37, 0)
-                    .cast("int")
-                    .alias("raw_score_out"),
-                ).alias("stats"),
-            )
-        ).alias("src"),
-    )
-    # DISTRIBUTED page assignment: global position in (lu, _id) order
-    # comes from a range-repartition + per-partition row numbers + a
-    # broadcast of per-partition COUNTS (one int per partition reaches
-    # the driver -- never the rows; the old toPandas() stager shipped
-    # the whole relation through the driver). page = position div
-    # page_size, and each page is then written by exactly one task.
-    # localCheckpoint pins ONE materialization of srt: the counts
-    # action and paged's build both consume it, and repartitionByRange
-    # re-SAMPLES its bounds per execution -- without the pin the two
-    # could disagree on which partition a row landed in, silently
-    # mis-sizing pages against the offsets computed from the counts
+    from ..catalog import register_views
+    from ..staging import stage
+
     def _build(d_tmp: str) -> None:
-        # the WHOLE expensive build (checkpoint, counts collect,
-        # page write, manifest) runs inside the flock'd stager:
-        # a concurrent cold-start WAITS for the winner's pages
+        # the WHOLE expensive build (view registration, checkpoint,
+        # counts collect, page write, manifest) runs inside the flock'd
+        # stager: a concurrent cold-start WAITS for the winner's pages
         # instead of running a duplicate multi-action staging job
-        # and discarding it at a rename (the repo-wide stager
-        # discipline -- streaming/core._stage_atomic)
+        register_views(spark, sf_dir)
+        # a null ts must die LOUDLY at stage time: F.to_json drops null
+        # struct fields (spark.sql.jsonGenerator.ignoreNullFields default),
+        # so a null lu would stage a page line with no "_lu" key -- a
+        # poisoned page that KeyErrors on every later scan and is invisible
+        # to the manifest's min/max pruning bounds. Per-row raise_error
+        # keeps the check distributed and free when no nulls exist.
+        _lu = F.unix_micros("ts")
+        hits = spark.table("events").select(
+            F.when(
+                _lu.isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit("scroll stager: null ts for event_id="),
+                        F.col("event_id").cast("string"),
+                    )
+                ).cast("long"),
+            )
+            .otherwise(_lu)
+            .alias("lu"),
+            # same poisoned-page hazard as lu: a null _id would be dropped
+            # from the staged json line and KeyError every later scan
+            F.when(
+                F.col("event_id").isNull(),
+                F.raise_error(F.lit("scroll stager: null event_id")).cast(
+                    "string"
+                ),
+            )
+            .otherwise(F.col("event_id").cast("string"))
+            .alias("_id"),
+            F.to_json(
+                F.struct(
+                    F.unix_micros("ts").alias("last_update"),
+                    F.col("user_id").cast("string").alias("from_person_id"),
+                    (F.col("event_id") % 50)
+                    .cast("string")
+                    .alias("to_person_id"),
+                    F.struct(
+                        # ROUND before the int cast: Spark truncates
+                        # double->int while DuckDB rounds (see views.py)
+                        F.round(F.col("value") * 100, 0)
+                        .cast("int")
+                        .alias("raw_score_in"),
+                        F.round(F.col("value") * 37, 0)
+                        .cast("int")
+                        .alias("raw_score_out"),
+                    ).alias("stats"),
+                )
+            ).alias("src"),
+        )
+        # DISTRIBUTED page assignment: global position in (lu, _id) order
+        # comes from a range-repartition + per-partition row numbers + a
+        # broadcast of per-partition COUNTS (one int per partition reaches
+        # the driver -- never the rows; the old toPandas() stager shipped
+        # the whole relation through the driver). page = position div
+        # page_size, and each page is then written by exactly one task.
+        # localCheckpoint pins ONE materialization of srt: the counts
+        # action and paged's build both consume it, and repartitionByRange
+        # re-SAMPLES its bounds per execution -- without the pin the two
+        # could disagree on which partition a row landed in, silently
+        # mis-sizing pages against the offsets computed from the counts
         srt = (
             hits.repartitionByRange(
                 max(spark.sparkContext.defaultParallelism, 1), "lu", "_id"
@@ -239,10 +230,7 @@ def stage_scroll_pages(
         with open(os.path.join(d_tmp, "manifest.json"), "w") as f:
             json.dump(manifest, f)
 
-    from ..streaming.core import _stage_atomic
-
-    _stage_atomic(d, _build)
-    return d
+    return stage("scroll", sf_dir, ("events",), _build, suffix=f"_{page_size}")
 
 
 def _load_manifest(path: str):

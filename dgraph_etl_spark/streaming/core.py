@@ -21,8 +21,6 @@ import itertools
 import os
 import shutil
 import tempfile
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,18 +32,9 @@ from ..catalog import (
     ts_bigint_unit,
 )
 from ..session import SessionKeyedMap
+from ..staging import MARKER, stage
 
 _MEM_IDS = itertools.count()
-
-
-def _source_tag(sf_dir: str, table: str) -> str:
-    """Scratch-dir key carrying SOURCE IDENTITY (mtime_ns + size), same
-    convention as catalog._compacted_source: a regenerated fixture under
-    the same directory name must never silently reuse stale staged
-    batches."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    st = os.stat(table_path(sf_dir, table))
-    return f"{tag}_{st.st_mtime_ns}_{st.st_size}"
 
 
 def events_schema(spark: SparkSession, sf_dir: str):
@@ -56,132 +45,28 @@ def events_schema(spark: SparkSession, sf_dir: str):
     return spark.read.parquet(table_path(sf_dir, "events")).schema
 
 
-_STAGE_MARKER = "_STAGED"
-
-
-def _stage_complete(d: str) -> bool:
-    return os.path.exists(os.path.join(d, _STAGE_MARKER))
-
-
-def _stage_atomic(d: str, write_batches) -> str:
-    """Stage a batch-file directory ATOMICALLY: build in a tmp sibling,
-    write a completion marker LAST, os.rename into place. A reader can
-    never observe a half-written batch file. The per-file existence
-    checks this replaces were a real race: process B saw process A's
-    batch3.parquet exist mid-write and handed Spark a truncated parquet.
-
-    Dir presence alone is NOT trusted: these /tmp names predate the
-    atomic stager, and a partial legacy dir left by a crashed per-file
-    run would otherwise be accepted as complete and served forever
-    (silently dropping batches from every replay). The marker -- written
-    after write_batches returns, inside the tmp sibling, so it exists
-    iff staging finished -- distinguishes complete from abandoned; a
-    marker-less dir is discarded and restaged.
-
-    Concurrency: stagers of the same target serialize on an flock'd
-    lock file. The earlier lock-free rename-aside protocol had an
-    unfixable TOCTOU -- between one stager's marker check and its
-    rename, a concurrent stager could discard the stale dir and
-    publish a COMPLETE one at ``d``, which the first stager's rename
-    then grabbed, leaving ``d`` transiently (or with an unguarded
-    delete, permanently) missing for the publisher's caller. Under the
-    lock, a complete dir is never renamed aside and ``d`` never goes
-    missing after a publish. flock is the lock primitive because the
-    kernel releases it when the holder dies, so a crashed stager never
-    wedges waiters AND there is no "break the dead holder's lock"
-    branch at all -- the previous pid-file protocol's break
-    (read-holder-pid, probe liveness, unlink) had its own TOCTOU:
-    between a waiter reading a dead pid and unlinking the lock, a
-    second waiter could re-acquire it, and the first then unlinked a
-    LIVE lock (two stagers raced to publish again, ENOTEMPTY). A live
-    holder is waited on (staging the 100x soak fixtures legitimately
-    takes minutes, so there is no mtime-based timeout), and the lock
-    file is never unlinked -- unlink-based cleanup re-opens the race,
-    because a waiter that opened the now-unlinked inode would
-    serialize against nobody."""
-    if _stage_complete(d):
-        return d
-    lock = f"{d}.lock"
-    deadline = time.monotonic() + 3600.0
-    import fcntl
-
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except OSError:
-                if _stage_complete(d):
-                    return d
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"stage lock {lock} held for over an hour; "
-                        "refusing to wait longer"
-                    )
-                time.sleep(0.05)
-        if _stage_complete(d):
-            return d
-        if os.path.exists(d):
-            # marker-less dir (abandoned, or pre-marker legacy): with
-            # the lock held nobody can be publishing -- discard it
-            stale = f"{d}.stale.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-            os.rename(d, stale)
-            shutil.rmtree(stale, ignore_errors=True)
-        tmp = f"{d}.tmp.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp)
-        try:
-            write_batches(tmp)
-            with open(os.path.join(tmp, _STAGE_MARKER), "w") as fh:
-                fh.write("complete\n")
-            os.rename(tmp, d)
-        except BaseException:
-            # a failed build must not strand its partial tmp sibling
-            # in /tmp forever (repeated probes of a bad fixture would
-            # accumulate orphan dirs unboundedly)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        return d
-    finally:
-        os.close(fd)  # closing the fd releases the flock
-
-
 def _scratch_stream_dir(sf_dir: str) -> str:
     """File streaming sources need a *directory*; the fixture is a
     single file. Stage a scratch dir holding a symlink to it (no data
-    copy; fixture stays read-only). Keyed by _source_tag (mtime+size),
-    NOT the bare basename -- two fixtures named sf0.001 under different
-    parents must not share a staged dir -- and the symlink is
-    re-pointed if a tag collision ever pairs it with a different
-    target path."""
-    tag = _source_tag(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"dgraph_etl_streamsrc_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    target = table_path(sf_dir, "events")
-    try:
-        if os.path.lexists(link):
-            try:
-                current = os.readlink(link)
-            except OSError:
-                # the entry exists but is NOT a symlink (a real file
-                # copied in by older tooling or a manual fixture copy):
-                # readlink raises EINVAL, which the docstring's repair
-                # promise must cover too -- treat it as mispaired
-                current = None
-            if current != target:
-                # atomic re-point: build a temp symlink and rename over
-                # the old one. remove-then-create had two races: a
-                # concurrent remover turned os.remove into an uncaught
-                # FileNotFoundError, and between the two calls a reader
-                # saw no link at all.
-                tmp = f"{link}.tmp.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-                os.symlink(target, tmp)
-                os.replace(tmp, link)
-        else:
-            os.symlink(target, link)
-    except (FileExistsError, FileNotFoundError):
-        pass  # concurrent stager won the race; same tag, same data
+    copy; fixture stays read-only). A published dir whose entry was
+    later replaced (a real file copied in by older tooling or a manual
+    fixture copy) is unmarked, so the stager discards and rebuilds it."""
+    target = os.path.abspath(table_path(sf_dir, "events"))
+
+    def link_ok(d: str) -> bool:
+        link = os.path.join(d, "events.parquet")
+        return os.path.islink(link) and os.readlink(link) == target
+
+    def build(tmp: str) -> None:
+        os.symlink(target, os.path.join(tmp, "events.parquet"))
+
+    d = stage("streamsrc", sf_dir, ("events",), build)
+    if not link_ok(d):
+        try:
+            os.remove(os.path.join(d, MARKER))
+        except FileNotFoundError:
+            pass  # a concurrent caller unmarked it first
+        d = stage("streamsrc", sf_dir, ("events",), build)
     return d
 
 
@@ -252,7 +137,7 @@ def time_split_source(sf_dir: str) -> str:
         )
         return [in1, in2, pc.invert(pc.or_(in1, in2))]
 
-    return _stage_event_thirds(sf_dir, "dgraph_etl_tsplit3", masks)
+    return _stage_event_thirds(sf_dir, "tsplit3", masks)
 
 
 def late_data_source(sf_dir: str) -> str:
@@ -298,19 +183,16 @@ def late_data_source(sf_dir: str) -> str:
         )
         return [in1, in2, pc.invert(pc.or_(in1, in2))]
 
-    return _stage_event_thirds(sf_dir, "dgraph_etl_late3", masks)
+    return _stage_event_thirds(sf_dir, "late3", masks)
 
 
-def _stage_event_thirds(sf_dir: str, prefix: str, mask_fn) -> str:
+def _stage_event_thirds(sf_dir: str, kind: str, mask_fn) -> str:
     """Shared stager for the event-time-thirds replay sources: computes
     the epoch-micros cuts ONCE here (the bit-exact-vs-oracle discipline
     lives in one place), delegates the batch membership to ``mask_fn``,
     pins replay order via mtimes, and stages atomically."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    tag = _source_tag(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
 
     def write(tmp: str) -> None:
         t = pq.read_table(table_path(sf_dir, "events"))
@@ -331,7 +213,7 @@ def _stage_event_thirds(sf_dir: str, prefix: str, mask_fn) -> str:
             # file source replays in mtime order; pin it explicitly
             os.utime(p, ((i + 1) * 1_000_000, (i + 1) * 1_000_000))
 
-    return _stage_atomic(d, write)
+    return stage(kind, sf_dir, ("events",), write)
 
 
 def earlier_epoch_dirs(root: str, epoch_id: int, prefix: str = "e") -> list[str]:
@@ -453,17 +335,6 @@ def table_batched_source(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tag = _source_tag(sf_dir, table)
-    prefix = "docs" if table == "documents" else table
-    # id_col is part of the staged identity: two calls splitting the
-    # same table by different columns must not share a dir (batch
-    # membership and replay order differ per column -- the under-keyed
-    # /tmp-tag stale-reuse class)
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"dgraph_etl_{prefix}{n_batches}_{id_col}_{tag}",
-    )
-
     def write(tmp: str) -> None:
         t = pq.read_table(table_path(sf_dir, table))
         lo = pc.min(t.column(id_col)).as_py()
@@ -497,7 +368,16 @@ def table_batched_source(
             pq.write_table(t.filter(mask), p)
             os.utime(p, ((i + 1) * 1_000_000, (i + 1) * 1_000_000))
 
-    return _stage_atomic(d, write)
+    # id_col is part of the staged identity: two calls splitting the
+    # same table by different columns must not share a dir (batch
+    # membership and replay order differ per column)
+    return stage(
+        "batched",
+        sf_dir,
+        (table,),
+        write,
+        suffix=f"_{table}{n_batches}_{id_col}",
+    )
 
 
 def scratch_state_root(query: str) -> str:

@@ -61,8 +61,8 @@ def _session_stopped(df) -> bool:
 def _cached_edges(spark, sf_dir):
     import os
 
-    from ..catalog import table_path
     from ..sources.bucketed import bucketed_table
+    from ..staging import source_tag, source_version
 
     # lazy stopped-session eviction (similarity._OPEN_INDEXES's
     # lifecycle): each cached DataFrame pins its session, so without
@@ -71,18 +71,12 @@ def _cached_edges(spark, sf_dir):
     # concurrent graph queries may both compute this sweep list
     for k in [k for k, v in list(_EDGE_CACHE.items()) if _session_stopped(v)]:
         _EDGE_CACHE.pop(k, None)
-    # the key carries the SOURCE content version (mtime_ns+size, the
-    # repo-wide staleness convention, same file the rest of the engine
-    # reads via catalog.table_path): a fixture regenerated in place
-    # mid-session must rebuild, or every graph query serves the
-    # pre-rebuild .cache()d edges while the oracle reads the new file
-    st = os.stat(table_path(sf_dir, "events"))
-    key = (
-        id(spark),
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-    )
+    # the key carries the SOURCE content version (staging's source
+    # key): a fixture regenerated in place mid-session must rebuild,
+    # or every graph query serves the pre-rebuild .cache()d edges
+    # while the oracle reads the new file
+    version = source_version(sf_dir, "events")
+    key = (id(spark), os.path.abspath(sf_dir), version)
     df = _EDGE_CACHE.get(key)
     if df is None:
         # unpersist + evict superseded versions of the same source so
@@ -94,21 +88,19 @@ def _cached_edges(spark, sf_dir):
                 pass
         _register_graph_views(spark, sf_dir)
         # the table base name carries the FULL source identity via the
-        # shared catalog.source_tag (path hash, not just basename):
+        # shared staging.source_tag (path hash, not just basename):
         # bucketed_table's version eviction sweeps siblings of one base
         # name, so a same-named fixture under a different parent
         # (/x/sf0.01 vs /y/sf0.01) must get its own base -- a
         # basename-only tag let one fixture's build DROP the other's
         # still-cached table out from under this cache (eviction scope
         # must equal cache scope)
-        from ..catalog import source_tag
-
         df = bucketed_table(
             spark,
             spark.table("edges"),
             f"bkt_graph_edges_{source_tag(sf_dir)}",
             "src",
-            version=f"{st.st_mtime_ns}_{st.st_size}",
+            version=version,
         ).cache()
         _EDGE_CACHE[key] = df
     return df

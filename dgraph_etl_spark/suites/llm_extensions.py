@@ -439,38 +439,14 @@ def c04_ivf_persisted(spark, sf_dir):
     deterministic probe as c04_ivf_topk, so it shares the same
     hash-exact oracle; result equivalence with the in-memory IVF is
     pinned in tests."""
-    import os
-    import tempfile
+    from ..staging import stage
 
-    from ..catalog import _evict_stale_generations, source_tag
-
-    # Key the index path by source identity (mtime_ns + size), matching
-    # catalog._compacted_source: a regenerated fixture under the same dir
-    # name must NOT silently reuse a stale index. The path-hashed
-    # source_tag keeps eviction scope == cache scope (_cached_edges'
-    # rule): a basename-only tag let two fixtures with the same leaf
-    # name evict each other's live index.
-    tag = source_tag(sf_dir)
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = f"{st.st_mtime_ns}_{st.st_size}"
-    path = os.path.join(
-        tempfile.gettempdir(), f"dgraph_etl_ivf_{tag}_{key}"
-    )
-    # generational eviction, the other half of the _compacted_source
-    # discipline: superseded indexes of the same fixture (stale
-    # mtime+size) are full partitioned corpus copies that would
-    # otherwise accumulate in /tmp across every regeneration round.
-    # Age-gated + path-scoped via the shared helper so an in-flight
-    # reader of the previous generation is never rmtree'd mid-scan;
-    # keep_name EXACT because this dir name has no trailing delimiter
-    # (a stale ..._500 would string-extend a live ..._50 prefix).
-    _evict_stale_generations(
-        tempfile.gettempdir(),
-        f"dgraph_etl_ivf_{tag}_",
-        keep_name=f"dgraph_etl_ivf_{tag}_{key}",
+    emb = _emb(spark, sf_dir)
+    path = stage(
+        "ivf", sf_dir, ("embeddings",), lambda p: S.write_ivf_index(emb, p)
     )
     return S.ivf_persisted_topk(
-        spark, _emb(spark, sf_dir), _query_vec(spark, sf_dir), k=10, path=path
+        spark, emb, _query_vec(spark, sf_dir), k=10, path=path
     )
 
 
@@ -1991,18 +1967,18 @@ def c31_snapshot_diff_bucketed(spark, sf_dir):
     c31_snapshot_diff (same oracle); plan pinned in
     tests/test_plan_shapes.py."""
     from ..sources.bucketed import bucketed_table
-    from .relational_closure import _sf_tag_and_ver, bucketed_documents_base
+    from ..staging import source_tag, source_version
+    from .relational_closure import bucketed_documents_base
 
     base = bucketed_documents_base(spark, sf_dir)
     v1 = base.select("doc_id", F.md5("text").alias("h"))
-    tag, _ver = _sf_tag_and_ver(sf_dir)
     v2 = bucketed_table(
         spark,
         _snapshot_v2(base),
-        f"bkt_docs_v2_{tag}",
+        f"bkt_docs_v2_{source_tag(sf_dir)}",
         "doc_id",
         n_buckets=16,
-        version=_ver("documents"),
+        version=source_version(sf_dir, "documents"),
     )
     a, b = v1.alias("a"), v2.alias("b")
     joined = a.join(

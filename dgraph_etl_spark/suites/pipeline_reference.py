@@ -634,32 +634,15 @@ def a27_rdf_roundtrip(spark, sf_dir):
     any 100 TB export; scores are integral by construction (MAX over
     int-cast raw scores) so the bigint facet rebuilds the double
     exactly."""
-    import os
-    import tempfile
+    from ..staging import stage
 
     register_views(spark, sf_dir)
     triples = R.edge_triples(spark.table("edges"))
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = (
-        os.path.basename(os.path.normpath(sf_dir))
-        + f"_{st.st_mtime_ns}_{st.st_size}"
+    # write_rdf writes into its path directly: staged, a crashed export
+    # can never be served as a PARTIAL triple file
+    path = stage(
+        "rdfrt", sf_dir, ("events",), lambda p: R.write_rdf(triples, p)
     )
-    path = os.path.join(tempfile.gettempdir(), f"dgraph_etl_rdfrt_{tag}")
-    if not os.path.isdir(path):
-        # atomic publish (tmp sibling + rename): write_rdf writes into
-        # the final path directly, so a crashed export would otherwise
-        # pass the isdir gate forever and serve a PARTIAL triple file
-        import shutil
-        import uuid
-
-        tmp = f"{path}.tmp.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        R.write_rdf(triples, tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(path):
-                raise
     lines = spark.read.text(path)
     pat = r"^_:(\S+) <has_connection> _:(\S+) \(score=(-?\d+)\) \.$"
     return lines.select(

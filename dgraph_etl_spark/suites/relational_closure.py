@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from ..catalog import register_views
 from ..registry import REGISTRY, register
+from ..staging import source_tag, source_version, stage
 from ..views import oracle_with_views as V
 
 
@@ -126,49 +127,6 @@ def b06_filter_predicates(spark, sf_dir):
     ).select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
 
 
-def _staged_io(sf_dir: str, name: str, table: str, write_fn) -> str:
-    """Content-keyed, atomically-staged IO directory for the format
-    round-trip queries (jsonl/csv/orc copies, partitioned sinks,
-    schema-evolution parts): the tag carries the SOURCE table's
-    mtime+size (a regenerated fixture under the same dir name never
-    reuses stale staging -- catalog._compacted_source's convention),
-    the write lands in a tmp sibling and renames into place
-    (directory presence == staging complete, so a concurrent process
-    can never read a half-written or mid-overwrite copy -- the old
-    per-call mode('overwrite') deleted the dir out from under a
-    concurrent reader), and subsequent calls reuse the staged copy.
-    Concurrent stagers race benignly: first rename wins."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    d = os.path.join(tempfile.gettempdir(), f"dgraph_etl_io_{tag}_{name}")
-    if os.path.exists(d):
-        return d
-    tmp = f"{d}.tmp.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    try:
-        write_fn(tmp)
-    except BaseException:
-        # a failed build must not strand its half-written tmp sibling
-        # (repeated retries would leak a full-size copy each time --
-        # the same discipline as _stage_atomic)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(d):
-            raise
-    return d
-
-
 @register(
     "b02_jsonl_scan",
     "SELECT doc_id, text, lang, source, n_chars FROM documents",
@@ -179,11 +137,12 @@ def b02_jsonl_scan(spark, sf_dir):
     the ES hits the reference decodes (A4, elastic.go:81) are exactly
     this shape."""
     docs = _t(spark, sf_dir, "documents")
-    path = _staged_io(
+    path = stage(
+        "io",
         sf_dir,
-        "docs_jsonl",
-        "documents",
+        ("documents",),
         lambda p: docs.write.mode("overwrite").json(p),
+        suffix="_docs_jsonl",
     )
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     return spark.read.schema(schema).json(path).select(
@@ -205,18 +164,16 @@ def b02_csv_scan(spark, sf_dir):
     # round-trip as NULL and diverge from the parquet-reading oracle.
     # Writing nulls as \N and empties as a quoted "" keeps the two
     # distinct through the text format (probed: exact round-trip).
-    path = _staged_io(
+    path = stage(
+        "io",
         sf_dir,
-        # v2: the tag is part of the content key, and the null/empty
-        # encoding below changed -- a pre-change staged dir must not be
-        # reused under the new read options
-        "docs_csv2",
-        "documents",
+        ("documents",),
         lambda p: docs.write.mode("overwrite")
         .option("header", True)
         .option("nullValue", "\\N")
         .option("emptyValue", '""')
         .csv(p),
+        suffix="_docs_csv",
     )
     schema = "doc_id bigint, lang string, source string, n_chars bigint"
     return (
@@ -299,11 +256,12 @@ def b02_orc_scan(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    path = _staged_io(
+    path = stage(
+        "io",
         sf_dir,
-        "docs_orc",
-        "documents",
+        ("documents",),
         lambda p: docs.write.mode("overwrite").orc(p),
+        suffix="_docs_orc",
     )
     return spark.read.orc(path).select("doc_id", "lang", "source", "n_chars")
 
@@ -323,13 +281,14 @@ def b04_partitioned_sink(spark, sf_dir):
     (PartitionFilters in explain, zero non-matching files opened) —
     the scan-side contract that makes 100 TB tables usable."""
     o = _t(spark, sf_dir, "orders")
-    path = _staged_io(
+    path = stage(
+        "io",
         sf_dir,
-        "orders_part",
-        "orders",
+        ("orders",),
         lambda p: o.write.mode("overwrite")
         .partitionBy("o_orderstatus")
         .parquet(p),
+        suffix="_orders_part",
     )
     back = spark.read.parquet(path)
     return (
@@ -502,7 +461,10 @@ def b13_self_join(spark, sf_dir):
     was nearly free, accepted). The strict value compare (not index
     compare) keeps pair multiplicity identical even under duplicate
     line numbers; group sizes are bounded by lines-per-order (<= 7),
-    so collect_list cannot skew."""
+    so collect_list cannot skew. Fixture contract: l_orderkey is NOT
+    NULL -- a NULL key would form a group and emit pairs the oracle's
+    equi-self-join drops (pinned in tests/test_fixture_contract.py,
+    test_not_null_contract[lineitem.l_orderkey])."""
     li = _t(spark, sf_dir, "lineitem")
     grouped = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list("l_linenumber")).alias("lns")
@@ -658,7 +620,11 @@ def b15_approx_error_bound(spark, sf_dir):
     acceptable: one pass, fixed memory, mergeable. The two arms are
     aggregated separately and joined on the group key (see
     _hll_verdict: mixing them rode the HLL buffers through the
-    distinct Expand pipeline; 19.2 -> 1.5 s at sf1)."""
+    distinct Expand pipeline; 19.2 -> 1.5 s at sf1). Fixture contract:
+    o_orderstatus is NOT NULL -- the inner join on it would drop a NULL
+    group the oracle's GROUP BY keeps (pinned in
+    tests/test_fixture_contract.py,
+    test_not_null_contract[orders.o_orderstatus])."""
     o = _t(spark, sf_dir, "orders")
     exact = o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers")
@@ -1720,7 +1686,6 @@ def b49_merge_upsert_bucketed(spark, sf_dir):
     tests/test_plan_shapes.py::test_merge_lane_bucketed_twin_contracts."""
     from ..sources.bucketed import bucketed_table
 
-    tag, _ver = _sf_tag_and_ver(sf_dir)
     base = bucketed_table(
         spark,
         _t(spark, sf_dir, "customer").select(
@@ -1728,10 +1693,10 @@ def b49_merge_upsert_bucketed(spark, sf_dir):
             F.col("c_name").alias("name"),
             F.col("c_acctbal").alias("acctbal"),
         ),
-        f"bkt_merge_base_{tag}",
+        f"bkt_merge_base_{source_tag(sf_dir)}",
         "k",
         n_buckets=16,
-        version=_ver("customer"),
+        version=source_version(sf_dir, "customer"),
     )
     upd = _merge_upsert_feed(_t(spark, sf_dir, "customer"))
     b, u = base.alias("b"), upd.alias("u")
@@ -1742,45 +1707,26 @@ def b49_merge_upsert_bucketed(spark, sf_dir):
     return _merge_upsert_output(merged)
 
 
-def _sf_tag_and_ver(sf_dir):
-    """The bucketed-table staleness convention: the shared
-    catalog.source_tag (path-hashed, so two fixtures with the same
-    leaf dir name never share -- or evict -- each other's tables)
-    plus a per-table source content version (mtime_ns + size -- stale
-    copies never reused)."""
-    import os
-
-    from ..catalog import source_tag
-
-    tag = source_tag(sf_dir)
-
-    def ver(table):
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        return f"{st.st_mtime_ns}_{st.st_size}"
-
-    return tag, ver
-
-
 def _bucketed_join_inputs(spark, sf_dir):
     """Shared by the b50 query and its plan contract: orders and
     customer bucketed+sorted by custkey into matching bucket counts."""
     from ..sources.bucketed import bucketed_table
 
-    tag, _ver = _sf_tag_and_ver(sf_dir)
+    tag = source_tag(sf_dir)
 
     orders = bucketed_table(
         spark,
         _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
         f"bkt_orders_{tag}",
         "o_custkey",
-        version=_ver("orders"),
+        version=source_version(sf_dir, "orders"),
     )
     cust = bucketed_table(
         spark,
         _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"),
         f"bkt_customer_{tag}",
         "c_custkey",
-        version=_ver("customer"),
+        version=source_version(sf_dir, "customer"),
     )
     return orders, cust
 
@@ -1820,7 +1766,7 @@ def _bucketed_orderkey_facts(spark, sf_dir):
     the layout, which is how a real warehouse maintains it."""
     from ..sources.bucketed import bucketed_table
 
-    tag, _ver = _sf_tag_and_ver(sf_dir)
+    tag = source_tag(sf_dir)
     li = bucketed_table(
         spark,
         _t(spark, sf_dir, "lineitem").select(
@@ -1833,7 +1779,7 @@ def _bucketed_orderkey_facts(spark, sf_dir):
         f"bkt_lineitem_ok_{tag}",
         "l_orderkey",
         n_buckets=32,
-        version=_ver("lineitem"),
+        version=source_version(sf_dir, "lineitem"),
     )
     o = bucketed_table(
         spark,
@@ -1843,7 +1789,7 @@ def _bucketed_orderkey_facts(spark, sf_dir):
         f"bkt_orders_ok_{tag}",
         "o_orderkey",
         n_buckets=32,
-        version=_ver("orders"),
+        version=source_version(sf_dir, "orders"),
     )
     return li, o
 
@@ -2474,7 +2420,7 @@ def b62_schema_evolution(spark, sf_dir):
             "doc_id", F.col("lang").alias("lang_code")
         ).write.mode("overwrite").parquet(os.path.join(p, "part=new"))
 
-    d = _staged_io(sf_dir, "schemaevo", "documents", write)
+    d = stage("io", sf_dir, ("documents",), write, suffix="_schemaevo")
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(d, "part=old"), os.path.join(d, "part=new")
     )
@@ -4645,14 +4591,13 @@ def _binary_stage_dir(sf_dir):
     """Stage a deterministic directory of raw binary files (the first
     16 documents' text bytes, one .bin each) -- the on-disk form
     multimodal corpora arrive in before any table exists. Delegates to
-    _staged_io: ONE copy of the content-keyed atomic staging
+    staging.stage: ONE copy of the content-keyed atomic staging
     discipline (a hand-rolled twin here had already drifted from it)."""
     import os
 
     def write(tmp):
         import duckdb
 
-        os.makedirs(tmp)
         con = duckdb.connect()
         rows = con.execute(
             "SELECT doc_id, text FROM read_parquet(?) "
@@ -4664,7 +4609,7 @@ def _binary_stage_dir(sf_dir):
             with open(os.path.join(tmp, f"doc_{doc_id:06d}.bin"), "wb") as f:
                 f.write(text.encode("utf-8"))
 
-    return _staged_io(sf_dir, "bin", "documents", write)
+    return stage("io", sf_dir, ("documents",), write, suffix="_bin")
 
 
 @register(
@@ -5151,14 +5096,13 @@ def bucketed_documents_base(spark, sf_dir):
     O(delta), not O(base)."""
     from ..sources.bucketed import bucketed_table
 
-    tag, _ver = _sf_tag_and_ver(sf_dir)
     return bucketed_table(
         spark,
         _t(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        f"bkt_documents_id_{tag}",
+        f"bkt_documents_id_{source_tag(sf_dir)}",
         "doc_id",
         n_buckets=16,
-        version=_ver("documents"),
+        version=source_version(sf_dir, "documents"),
     )
 
 

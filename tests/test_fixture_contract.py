@@ -142,22 +142,42 @@ def test_normalized_instants_in_plausible_window(spark, sf_dir):
             )
 
 
+# NOT NULL columns a query's rewrite relies on: (table, column, the
+# query and why). Each query's docstring names its entry here.
+NOT_NULL_CONTRACTS = {
+    "events.ts": (
+        "b73's single-pass retention form (collect_set of week) matches "
+        "the oracle's join ONLY when ts is never NULL: collect_set drops "
+        "a NULL week the join would keep (and the dedup lanes rely on "
+        "it too); restore the generator or revert b73 to the join form"
+    ),
+    "lineitem.l_orderkey": (
+        "b13_self_join groups line numbers per l_orderkey and explodes "
+        "the pairs in-row: a NULL key would form a group and emit pairs "
+        "the oracle's equi-self-join drops"
+    ),
+    "orders.o_orderstatus": (
+        "b15_approx_error_bound joins its exact and HLL arms on "
+        "o_orderstatus: the inner join drops a NULL group that the "
+        "oracle's GROUP BY keeps"
+    ),
+}
+
+
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_events_ts_not_null(spark, sf_dir):
-    """b73's single-pass retention form (collect_set of week) matches
-    the oracle's join ONLY under the fixture's events.ts NOT NULL
-    contract: collect_set drops a NULL week the join would keep. The
-    dependency was acknowledged in a comment (r12 advice) -- this makes
-    a fixture regenerated WITH NULL timestamps fail loudly here instead
-    of silently dropping retention cells."""
+@pytest.mark.parametrize("contract", sorted(NOT_NULL_CONTRACTS))
+def test_not_null_contract(spark, sf_dir, contract):
+    """A fixture regenerated WITH NULLs in a column some query's
+    rewrite assumes NOT NULL must fail loudly here, naming the query,
+    instead of silently shifting that query's result."""
     from pyspark.sql import functions as F
 
-    df = load_table(spark, sf_dir, "events")
-    n_null = df.filter(F.col("ts").isNull()).count()
+    table, column = contract.split(".")
+    df = load_table(spark, sf_dir, table)
+    n_null = df.filter(F.col(column).isNull()).count()
     assert n_null == 0, (
-        f"{sf_dir}/events: {n_null} NULL ts rows -- b73's collect_set "
-        "form (and the dedup lanes' fixture contract) require NOT NULL; "
-        "restore the generator or revert b73 to the join form"
+        f"{sf_dir}/{table}: {n_null} NULL {column} rows -- "
+        + NOT_NULL_CONTRACTS[contract]
     )
 
 
@@ -233,12 +253,9 @@ def test_compacted_layout_evicts_stale_generations(spark, tmp_path):
     import shutil
     import time
 
-    from dgraph_etl_spark.catalog import (
-        _EVICT_GRACE_SECONDS,
-        _LAYOUT_ROOT,
-        _compacted_source,
-        source_tag,
-    )
+    from dgraph_etl_spark.catalog import _compacted_source
+    from dgraph_etl_spark.staging import _EVICT_GRACE_SECONDS, source_tag
+    from dgraph_etl_spark.staging import root as _root
 
     sf = str(tmp_path / "sf_evict")
     os.makedirs(sf)
@@ -246,12 +263,16 @@ def test_compacted_layout_evicts_stale_generations(spark, tmp_path):
         "/root/testdata/sf0.001/documents.parquet",
         os.path.join(sf, "documents.parquet"),
     )
-    os.makedirs(_LAYOUT_ROOT, exist_ok=True)
+    _LAYOUT_ROOT = _root()
     tag = source_tag(sf)
-    stale = os.path.join(_LAYOUT_ROOT, f"{tag}_documents_1_1_8")
-    young = os.path.join(_LAYOUT_ROOT, f"{tag}_documents_2_2_8")
+    stale = os.path.join(
+        _LAYOUT_ROOT, f"dgraph_etl_layout_{tag}_documents_8_1_1"
+    )
+    young = os.path.join(
+        _LAYOUT_ROOT, f"dgraph_etl_layout_{tag}_documents_8_2_2"
+    )
     foreign = os.path.join(
-        _LAYOUT_ROOT, "sf_evict_otherhash_documents_1_1_8"
+        _LAYOUT_ROOT, "dgraph_etl_layout_sf_evict_otherhash_documents_8_1_1"
     )
     for d in (stale, young, foreign):
         os.makedirs(d, exist_ok=True)

@@ -543,7 +543,7 @@ def test_evict_stale_generations_is_age_gated_and_scoped(tmp_path):
     import os
     import time
 
-    from dgraph_etl_spark.catalog import (
+    from dgraph_etl_spark.staging import (
         _EVICT_GRACE_SECONDS,
         _evict_stale_generations,
     )
@@ -575,7 +575,7 @@ def test_evict_stale_generations_keep_name_is_exact(tmp_path):
     import os
     import time
 
-    from dgraph_etl_spark.catalog import (
+    from dgraph_etl_spark.staging import (
         _EVICT_GRACE_SECONDS,
         _evict_stale_generations,
     )

@@ -364,7 +364,7 @@ def test_stage_atomic_cleans_tmp_on_failed_build(tmp_path):
     """A failed build must not strand its partial tmp sibling."""
     import pytest
 
-    from dgraph_etl_spark.streaming.core import _stage_atomic
+    from dgraph_etl_spark.staging import publish as _stage_atomic
 
     d = str(tmp_path / "staged")
 
@@ -517,15 +517,13 @@ def test_scratch_stream_dir_repairs_non_symlink_entry(tmp_path):
     EINVAL."""
     import os as _os
 
-    from dgraph_etl_spark.streaming.core import (
-        _scratch_stream_dir,
-        _source_tag,
-    )
+    from dgraph_etl_spark.staging import source_tag, source_version
+    from dgraph_etl_spark.streaming.core import _scratch_stream_dir
 
     sf = "/root/testdata/sf0.001"
     import tempfile
 
-    tag = _source_tag(sf, "events")
+    tag = f"{source_tag(sf)}_{source_version(sf, 'events')}"
     d = _os.path.join(tempfile.gettempdir(), f"dgraph_etl_streamsrc_{tag}")
     _os.makedirs(d, exist_ok=True)
     link = _os.path.join(d, "events.parquet")

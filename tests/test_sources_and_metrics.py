@@ -230,11 +230,9 @@ def test_stage_atomic_lock_serializes_and_never_drops_complete(tmp_path):
     delete a just-published complete dir.)"""
     import threading
 
-    from dgraph_etl_spark.streaming.core import (
-        _STAGE_MARKER,
-        _stage_atomic,
-        _stage_complete,
-    )
+    from dgraph_etl_spark.staging import MARKER as _STAGE_MARKER
+    from dgraph_etl_spark.staging import is_published as _stage_complete
+    from dgraph_etl_spark.staging import publish as _stage_atomic
 
     d = str(tmp_path / "staged")
     calls = []
@@ -280,10 +278,8 @@ def test_stage_atomic_crashed_holder_releases_lock(tmp_path):
     import subprocess
     import sys
 
-    from dgraph_etl_spark.streaming.core import (
-        _stage_atomic,
-        _stage_complete,
-    )
+    from dgraph_etl_spark.staging import is_published as _stage_complete
+    from dgraph_etl_spark.staging import publish as _stage_atomic
 
     d = str(tmp_path / "staged")
     # child acquires the flock, signals readiness, then hard-crashes

@@ -3,8 +3,10 @@
 query paths at sf1 (10x the driver's sf0.1) so plan-level wins resolve
 above the host's documented +-20% sub-second floor noise.
 
-The sf0.1 headline bench is left byte-identical (same contract, same
-JSON line); this lane is OPT-IN and additive:
+The sf0.1 headline bench keeps its contract and JSON line, but round 13
+also added the g03_hop2_coldedges lane to bench.HEADLINE, so headline
+totals from before and after that round differ by that lane; this
+heavy lane is OPT-IN and additive:
 
 - fixture: the scale soak's key-remapped sf1 replica (10x facts, fixed
   dims -- tools/scale_soak.py docstring documents the remap), built

@@ -91,11 +91,12 @@ def main() -> None:
     # aggressive cleaner cadence for a session that runs MANY iterative
     # queries back-to-back at 1000x: each pagerank/WCC variant's
     # localCheckpoint'd edge side (~GBs at 1000x) is freed only when
-    # JVM GC lets ContextCleaner see the dropped reference -- the
-    # default 30min periodicGC never fires inside one soak, and three
-    # pagerank variants' retained edge checkpoints OOM'd the 16g heap
-    # (round-11 session, AGGREGATE_OUT_OF_MEMORY then GCLocker alloc
-    # failure in g26 at 1000x)
+    # JVM GC lets ContextCleaner see the dropped reference. The session
+    # default is 5min (session.py); under Spark's own 30min default,
+    # three pagerank variants' retained edge checkpoints OOM'd the 16g
+    # heap inside one soak (round-11 session, AGGREGATE_OUT_OF_MEMORY
+    # then GCLocker alloc failure in g26 at 1000x), and 1min keeps that
+    # float well below 5min's at 1000x
     spark = get_spark(
         app_name="graph_soak",
         extra_conf={"spark.cleaner.periodicGC.interval": "1min"},

@@ -100,7 +100,7 @@ def _src_tag(src_sf: str) -> str:
     """Content key of the source fixture (mtime_ns+size per parquet):
     a regenerated /root/testdata/sf0.1 must invalidate the scaled
     replica, or ratios would compare new base data against a stale
-    scratch build -- same content-keyed-staging rule as _staged_io."""
+    scratch build -- same content-keyed-staging rule as staging.stage."""
     parts = []
     for fn in sorted(os.listdir(src_sf)):
         if fn.endswith(".parquet"):
@@ -119,7 +119,7 @@ def build_fixture(
     the previous build-in-place path let a second builder rmtree a
     half-built dir mid-COPY and then stamp the interleaved result as
     complete, poisoning every later --skip-build reader. Same
-    discipline as streaming.core._stage_atomic."""
+    discipline as staging.publish."""
     import fcntl
 
     import duckdb

@@ -15,10 +15,15 @@ Scale design:
   pigeonhole banding (r+1 chunks, bucket-local join, exact
   bit_count(xor) filter).
 - n-gram Jaccard: exact set similarity on blocked candidate pairs;
-  SQL-expressible, so fully oracle-checked.
+  SQL-expressible, so fully oracle-checked. Its pairs come from
+  ``set_overlap``, the exact set-overlap join shared with the c15
+  screen, c64 containment and g15 link prediction.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -313,66 +318,86 @@ def lsh_candidate_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, n: int = 3, block_col: str = "lang", threshold: float = 0.0
+def set_overlap(
+    a: DataFrame, b: DataFrame, on: list[str], pair=None
 ) -> DataFrame:
-    """n-gram Jaccard similarity on blocked pairs (exact; the oracle
-    reproduces it in SQL). Jaccard = |A∩B| / (|A|+|B|-|A∩B|) computed
-    from exploded shingle sets via a grouped equi-join -- set sizes and
-    intersection counts are exact integers, the final division is one
-    IEEE op.
+    """Exact set-overlap join -- the ONE core behind n-gram Jaccard
+    (c02/c17/c42), the incremental near-dup screen (c15), shingle
+    containment (c64) and neighbour-overlap link prediction (g15).
+    Each input holds one row per (set, element), shaped
+    ``(id, sz, *on)``: ``id`` names the set, ``sz`` is its size and
+    ``on`` the element (plus any block keys). One equi-join on ``on``
+    (an optional ``pair(a.id, b.id)`` residual such as ``operator.lt``
+    for unordered self-pairs or ``operator.ne`` for ordered ones), one
+    hash aggregate; returns ``(id_a, id_b, sz_a, sz_b, n_common)``
+    for every pair sharing at least one element. Equi-join semantics:
+    a NULL key never pairs, and an empty side gives no rows.
 
-    Round-12 shape: each doc's set size is ``size(token_ngrams(...))``
-    computed IN-ROW before the explode (token_ngrams is already
-    distinct, so the array length IS the old post-explode
-    count-per-doc), carried on every shingle row, and grouped through
-    the intersection agg -- (doc_a, doc_b) determines (sz_a, sz_b), so
-    the extended grouping key changes nothing. That removes the sizes
-    aggregate (a full shingle-stream shuffle) and both size joins, and
-    leaves ``sh`` with one consumer per self-join side -- the
-    checkpoint shrinks to join-reuse only. The self-join itself stays
-    a streamed equi-join (NOT the in-row ordered_pairs form the LSH
-    lanes use): raw gram buckets are unbounded -- a stopword bigram
-    shared by k docs would flatten k^2 pair structs into ONE row --
-    while LSH band buckets are soak-bounded (hottest key 27 rows)."""
-    base = docs.select(
-        "doc_id",
-        F.col(block_col).alias("blk"),
-        token_ngrams(n=n).alias("gs"),
-    )
-    sh = base.select(
-        "doc_id",
-        "blk",
-        F.size("gs").alias("sz"),
-        F.explode("gs").alias("g"),
-    ).localCheckpoint()
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+    Sizes ride IN-ROW: the caller computes ``sz`` before the explode
+    (e.g. ``size(token_ngrams(...))`` -- the arrays are distinct, so
+    the length IS the post-explode count per set), and it is grouped
+    through the intersection agg: (id_a, id_b) determines (sz_a,
+    sz_b), so the extended grouping key changes nothing. That saves
+    the per-set sizes aggregate (a full element-stream shuffle) and
+    both size join-backs, and leaves a self-join input with one
+    consumer per side (callers localCheckpoint it for join reuse).
+
+    The join stays a streamed equi-join, NOT the in-row
+    ``ordered_pairs`` form the LSH/SimHash/c30 lanes use: element
+    buckets are unbounded -- a stopword gram shared by k sets would
+    flatten k^2 pair structs into ONE row -- while LSH band buckets
+    are soak-bounded (hottest key 27 rows)."""
+    l, r = a.alias("a"), b.alias("b")
+    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on]
+    if pair is not None:
+        cond.append(pair(F.col("a.id"), F.col("b.id")))
+    return (
+        l.join(r, reduce(operator.and_, cond))
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
             F.col("a.sz").alias("sz_a"),
             F.col("b.sz").alias("sz_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = inter.withColumn(
-        "jaccard",
-        F.round(
-            F.col("n_common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-            4,
-        ),
+
+
+def jaccard(digits: int) -> Column:
+    """|A∩B| / (|A|+|B|-|A∩B|) over set_overlap's columns, rounded:
+    exact integer sizes and counts, one IEEE division."""
+    n = F.col("n_common")
+    return F.round(n / (F.col("sz_a") + F.col("sz_b") - n), digits)
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, n: int = 3, block_col: str = "lang", threshold: float = 0.0
+) -> DataFrame:
+    """n-gram Jaccard similarity on blocked pairs (exact; the oracle
+    reproduces it in SQL): a set_overlap self-join of each doc's
+    distinct shingles, blocked on ``block_col``. The exploded shingle
+    stream feeds both join sides, so it is materialized once."""
+    base = docs.select(
+        F.col("doc_id").alias("id"),
+        F.col(block_col).alias("blk"),
+        token_ngrams(n=n).alias("gs"),
     )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "n_common", "jaccard"
+    sh = base.select(
+        "id",
+        "blk",
+        F.size("gs").alias("sz"),
+        F.explode("gs").alias("g"),
+    ).localCheckpoint()
+    return (
+        set_overlap(sh, sh, ["blk", "g"], operator.lt)
+        .withColumn("jaccard", jaccard(4))
+        .filter(F.col("jaccard") >= threshold)
+        .select(
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            "n_common",
+            "jaccard",
+        )
     )
 
 

@@ -28,8 +28,12 @@ Scale notes (power-law graphs, 100 TB):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.dedup import jaccard, set_overlap
 
 
 def team_seed(team_member: DataFrame, team_id: str) -> DataFrame:
@@ -730,53 +734,41 @@ def jaccard_link_prediction(
     exactly (set sizes are ints, one IEEE division -- fully
     oracle-checkable).
 
-    Scale shape: candidate pairs come from wedges (two equi-joins
-    through the shared neighbor -- the only quadratic step, and it is
-    per-neighbor-degree, the same bound as triangle counting; at
-    100 TB the hub mitigation is the degree-oriented variant /
-    salting, as in triangle_count_degree_oriented). Existing edges
-    are removed by one anti-join on the canonical pair; degrees
-    broadcast-join back onto the surviving candidates.
+    Scale shape: the sets are neighbour sets, so candidate pairs come
+    from wedges -- a ``set_overlap`` self-join of the symmetric
+    adjacency through the shared neighbor ``u``, the only quadratic
+    step, per-neighbor-degree like triangle counting (at 100 TB the
+    hub mitigation is the degree-oriented variant / salting, as in
+    triangle_count_degree_oriented). Degrees join onto the adjacency
+    by ``v`` BEFORE the wedge and ride in-row as the set sizes, so
+    the threshold filter plans below the one anti-join that removes
+    existing edges on the canonical pair.
 
-    ``und`` feeds four consumers (both wedge sides and the degree agg
-    through the symmetric adjacency, plus the anti-join); the lazy
-    localCheckpoint (round 12) materializes the canonical pair set
-    once instead of re-planning scan+dedup per consumer."""
+    ``und`` feeds the adjacency (both wedge sides and the degree agg)
+    and the anti-join; the lazy localCheckpoint (round 12)
+    materializes the canonical pair set once instead of re-planning
+    scan+dedup per consumer."""
     und = undirected_edges(edges).localCheckpoint(eager=False)
     sym = _symmetric_adjacency(und)
-    deg = _degrees(sym)
-    # wedge: x - n - y with x < y  =>  candidate pair (x, y), counted
-    # once per shared neighbor n -> count(*) = |N(x) ∩ N(y)|
-    l, r = sym.alias("l"), sym.alias("r")
-    common = (
-        l.join(r, (F.col("l.u") == F.col("r.u")) & (F.col("l.v") < F.col("r.v")))
-        .groupBy(
-            F.col("l.v").alias("x"), F.col("r.v").alias("y")
+    sets = sym.join(
+        _degrees(sym).select(F.col("node").alias("v"), F.col("deg").alias("sz")),
+        "v",
+    ).select(F.col("v").alias("id"), "sz", "u")
+    scored = (
+        set_overlap(sets, sets, ["u"], operator.lt)
+        .select(
+            F.col("id_a").alias("x"),
+            F.col("id_b").alias("y"),
+            "n_common",
+            jaccard(6).alias("jaccard"),
         )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    non_adjacent = common.join(
+    return scored.join(
         und,
-        (common["x"] == und["a"]) & (common["y"] == und["b"]),
+        (scored["x"] == und["a"]) & (scored["y"] == und["b"]),
         "left_anti",
     )
-    dx = deg.select(F.col("node").alias("x"), F.col("deg").alias("dx"))
-    dy = deg.select(F.col("node").alias("y"), F.col("deg").alias("dy"))
-    scored = (
-        non_adjacent.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            "x",
-            "y",
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("dx") + F.col("dy") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    return scored.filter(F.col("jaccard") >= threshold)
 
 
 def avg_neighbor_degree(edges: DataFrame) -> DataFrame:

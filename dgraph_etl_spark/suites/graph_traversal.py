@@ -1266,8 +1266,9 @@ def g14_kcore(spark, sf_dir):
 def g15_link_prediction(spark, sf_dir):
     """Graph analytics beyond the reference: common-neighbor link
     prediction -- non-adjacent vertex pairs ranked by Jaccard overlap
-    of their neighbor sets (wedge join -> anti-join off existing edges
-    -> degree join). Exact set-size arithmetic; fully oracle-checked."""
+    of their neighbor sets (degree-carrying wedge join -> threshold ->
+    anti-join off existing edges). Exact set-size arithmetic; fully
+    oracle-checked."""
     edges, _, _ = _graph_inputs(spark, sf_dir)
     return G.jaccard_link_prediction(edges, threshold=0.3)
 
@@ -1570,7 +1571,14 @@ def g21_path_multiplicity(spark, sf_dir):
     Unhinted, the planner built the WHOLE edge relation (its
     known-size scan estimates under the threshold while the
     frontier-join's output estimate doesn't): a 1.1M-pair build to
-    probe a frontier at sf1, 1.31s -> 0.78s flipped."""
+    probe a frontier at sf1, 1.31s -> 0.78s flipped.
+
+    Hub-seed caveat: the forced broadcast is only safe while the seed
+    team's out-edges stay small. A team holding a hub would broadcast
+    a hub's whole adjacency every run; the bound (``team_seed(TEAM)
+    join edges`` on src <= session.PER_ROUND_BCAST_CEILING_ROWS) is a
+    declared fixture contract,
+    tests/test_fixture_contract.py::test_seed_frontier_bound."""
     edges, team_member, _ = _graph_inputs(spark, sf_dir)
     seeds = G.team_seed(team_member, TEAM)
     hop2 = G.k_hop(edges, seeds, k=2)[1]

@@ -10,6 +10,8 @@ hash-matched.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import functions as F
 
 from ..catalog import register_views
@@ -1482,16 +1484,9 @@ def c15_incremental_dedup(spark, sf_dir):
     are anti-joins against CORPUS-size state, linear in batch size --
     never batch x batch or corpus x corpus.
 
-    Round-12 shape (the ngram_jaccard_pairs treatment): each side's
-    per-doc set size is ``size(token_ngrams(...))`` computed IN-ROW
-    before the explode (token_ngrams is distinct, so the array length
-    IS the old post-explode count), carried on the gram rows, and
-    grouped through the intersection agg -- (i_id, c_id) determines
-    (si, sc), so the extended key changes nothing. That removes both
-    per-side size aggregates (each a full gram-stream shuffle of its
-    side) and both join-backs, and leaves each gram subtree with ONE
-    consumer, so the corpus is tokenized once per side instead of
-    twice."""
+    The fuzzy screen is a two-sided ``D.set_overlap`` (incoming x
+    corpus, blocked on lang): each side's gram subtree has ONE
+    consumer, so the corpus is tokenized once."""
     docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") < 400)
     incoming = docs.filter(F.col("doc_id") >= 400)
@@ -1502,35 +1497,16 @@ def c15_incremental_dedup(spark, sf_dir):
 
     def grams(df):
         base = df.select(
-            "doc_id", "lang", D.token_ngrams(n=2).alias("gs")
+            F.col("doc_id").alias("id"), "lang", D.token_ngrams(n=2).alias("gs")
         )
         return base.select(
-            "doc_id", "lang", F.size("gs").alias("sz"), F.explode("gs").alias("g")
+            "id", "lang", F.size("gs").alias("sz"), F.explode("gs").alias("g")
         )
 
-    ig, cg = grams(incoming), grams(corpus)
-    inter = (
-        ig.alias("i")
-        .join(
-            cg.alias("c"),
-            (F.col("i.lang") == F.col("c.lang")) & (F.col("i.g") == F.col("c.g")),
-        )
-        .groupBy(
-            F.col("i.doc_id").alias("i_id"),
-            F.col("c.doc_id").alias("c_id"),
-            F.col("i.sz").alias("si"),
-            F.col("c.sz").alias("sc"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     near = (
-        inter.filter(
-            F.round(
-                F.col("n_common") / (F.col("si") + F.col("sc") - F.col("n_common")), 4
-            )
-            >= 0.5
-        )
-        .select(F.col("i_id").alias("doc_id"))
+        D.set_overlap(grams(incoming), grams(corpus), ["lang", "g"])
+        .filter(D.jaccard(4) >= 0.5)
+        .select(F.col("id_a").alias("doc_id"))
         .dropDuplicates(["doc_id"])
     )
     return (
@@ -3781,9 +3757,10 @@ def c64_containment_pairs(spark, sf_dir):
     both directions: A-contained-in-B and B-contains-A are different
     facts. Shape: one shingle-keyed equi-join generates only pairs
     that actually share a shingle (never all-pairs), one hash agg per
-    ordered pair, sizes broadcast back. At 100 TB the join key is the
-    shingle hash and hot boilerplate shingles are dropped first (the
-    c27/c32 screen) exactly as in cross-source overlap (c30)."""
+    ordered pair (``D.set_overlap``, sizes in-row). At 100 TB the join
+    key is the shingle hash and hot boilerplate shingles are dropped
+    first (the c27/c32 screen) exactly as in cross-source overlap
+    (c30)."""
     docs = _docs(spark, sf_dir)
     t = F.split(F.col("text"), " ")
     grams = docs.select(
@@ -3797,41 +3774,26 @@ def c64_containment_pairs(spark, sf_dir):
             )
         ).alias("gs"),
     )
-    # materialized once: exploded feeds BOTH self-join sides
-    # (ngram_jaccard_pairs' rationale). |A| is size(gs) computed
-    # IN-ROW before the explode (gs is distinct, so the array length
-    # IS the old post-explode count-per-doc) and grouped through the
-    # intersection agg -- doc_a determines sz, so the extended key
-    # changes nothing and the sizes aggregate (a full shingle-stream
-    # shuffle) plus its join-back disappear (round 12).
+    # materialized once: exploded feeds BOTH sides of the
+    # set_overlap self-join (whose docstring carries the in-row size
+    # rationale); |A| is sz_a
     exploded = grams.select(
-        "doc_id", F.size("gs").alias("sz"), F.explode("gs").alias("g")
+        F.col("doc_id").alias("id"),
+        F.size("gs").alias("sz"),
+        F.explode("gs").alias("g"),
     ).localCheckpoint()
-    a, b = exploded.alias("a"), exploded.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sz").alias("sz"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        inter.withColumn(
+        D.set_overlap(exploded, exploded, ["g"], operator.ne)
+        .withColumn(
             "containment",
-            F.round(F.col("n_common").cast("double") / F.col("sz"), 4),
+            F.round(F.col("n_common").cast("double") / F.col("sz_a"), 4),
         )
         .filter(F.col("containment") >= 0.8)
         .select(
-            "doc_a",
-            "doc_b",
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
             "n_common",
-            F.col("sz").alias("size_a"),
+            F.col("sz_a").alias("size_a"),
             "containment",
         )
     )

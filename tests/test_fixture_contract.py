@@ -181,6 +181,32 @@ def test_not_null_contract(spark, sf_dir, contract):
     )
 
 
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_seed_frontier_bound(spark, sf_dir):
+    """g21_path_multiplicity force-broadcasts the seed-adjacent edge
+    set (team_seed(TEAM) joined to edges on src). A fixture whose seed
+    team gains a hub must fail HERE, naming g21, before that broadcast
+    outgrows the per-round ceiling."""
+    from dgraph_etl_spark.graph.traverse import team_seed
+    from dgraph_etl_spark.session import PER_ROUND_BCAST_CEILING_ROWS
+    from dgraph_etl_spark.suites.graph_traversal import (
+        TEAM,
+        _register_graph_views,
+    )
+
+    # the edges VIEW g21 reads (uncached: no bucketed copy per sf)
+    _register_graph_views(spark, sf_dir)
+    edges = spark.table("edges")
+    seeds = team_seed(spark.table("team_member"), TEAM)
+    n = seeds.join(edges, seeds["id"] == edges["src"]).count()
+    assert n <= PER_ROUND_BCAST_CEILING_ROWS, (
+        f"{sf_dir}: the seed team's out-edges are {n} rows, over "
+        f"PER_ROUND_BCAST_CEILING_ROWS={PER_ROUND_BCAST_CEILING_ROWS} -- "
+        "g21_path_multiplicity force-broadcasts this frontier; drop its "
+        "broadcast hint or pick a seed team without a hub"
+    )
+
+
 def test_encoding_consistent_across_sfs():
     """All three scale factors should ship the same physical encodings;
     a mixed round would make sf0.001-green/sf0.01-red bugs look like

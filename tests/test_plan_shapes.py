@@ -6,6 +6,8 @@ global sort — all invisible at sf0.001, all fatal at scale."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from tests.oracle_utils import formatted_plan  # noqa: E402
@@ -443,6 +445,66 @@ def test_incremental_dedup_screens_are_joins_not_products(spark, sf_small):
     assert "Join LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def _plan_tree(plan: str) -> list[str]:
+    """The operator-tree lines of a formatted plan (the block between
+    the header and the per-node details)."""
+    return plan.split("== Physical Plan ==\n", 1)[1].split("\n\n", 1)[0].splitlines()
+
+
+def _node_details(plan: str, node: str) -> str:
+    """The formatted-plan details block of the node whose tree line is
+    ``node`` (e.g. ``+- Filter (47)``)."""
+    nid = re.search(r"\((\d+)\)$", node).group(1)
+    return plan.split(f"\n({nid}) ", 1)[1].split("\n\n", 1)[0]
+
+
+def test_ngram_jaccard_one_equi_join_one_agg_pair(spark, sf_small):
+    """c02_ngram_jaccard (the curation benchmark's near-dup hot path,
+    via dedup.set_overlap): exactly ONE join, an equi-join on (blk, g)
+    with the doc-id order as its residual, and ONE partial/final
+    HashAggregate pair -- a second pair means a per-doc sizes
+    aggregate came back instead of the in-row sizes; a nested loop
+    means the element keys fell out of the join."""
+    plan = plan_of(spark, sf_small, "c02_ngram_jaccard")
+    tree = _plan_tree(plan)
+    joins = [ln for ln in tree if "Join" in ln]
+    assert len(joins) == 1, tree
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    details = _node_details(plan, joins[0])
+    assert re.search(r"Left keys \[2\]: \[blk#\d+, g#\d+\]", details), details
+    assert re.search(r"Right keys \[2\]: \[blk#\d+, g#\d+\]", details), details
+    assert sum("HashAggregate" in ln for ln in tree) == 2, tree
+    assert plan.count("partial_count(1)") == 1, plan
+
+
+def test_link_prediction_threshold_below_anti_join(spark, sf_small):
+    """g15: the set sizes (degrees) ride in-row through the wedge's
+    set_overlap, so the jaccard >= threshold Filter is computable --
+    and plans -- BELOW the existing-edge LeftAnti join: the anti-join
+    only probes scored survivors."""
+    plan = plan_of(spark, sf_small, "g15_link_prediction")
+    tree = _plan_tree(plan)
+    at = [i for i, ln in enumerate(tree) if "Join LeftAnti" in ln]
+    assert len(at) == 1, tree
+    depth = len(tree[at[0]]) - len(tree[at[0]].lstrip(" :+-|"))
+    below = []
+    for ln in tree[at[0] + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-|")) <= depth:
+            break
+        below.append(ln)
+    thresholds = [
+        ln
+        for ln in below
+        if re.search(r"\bFilter \(\d+\)$", ln)
+        and ">= 0.3)" in _node_details(plan, ln)
+    ]
+    assert len(thresholds) == 1, (
+        "the jaccard threshold Filter must sit below the LeftAnti join",
+        tree,
+    )
 
 
 def test_bucketed_join_zero_exchange_zero_sort(spark, sf_small):

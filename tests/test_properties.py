@@ -1297,6 +1297,90 @@ def test_g10_pagerank_empty_graph_fails_loudly(spark):
         weighted_pagerank(empty)
 
 
+def _overlap_rows(sets):
+    """(id, blk, elements) sets -> set_overlap's (id, sz, blk, g) rows,
+    the size carried in-row as its callers compute it."""
+    return [
+        (i, len(set(es)), blk, g) for i, blk, es in sets for g in sorted(set(es))
+    ]
+
+
+def _overlap_ref(a_sets, b_sets, pair):
+    out = set()
+    for ia, ba, ea in a_sets:
+        for ib, bb, eb in b_sets:
+            n = len(set(ea) & set(eb))
+            if n == 0 or ba is None or bb is None or ba != bb:
+                continue
+            if pair is None or pair(ia, ib):
+                out.add((ia, ib, len(set(ea)), len(set(eb)), n))
+    return out
+
+
+def test_set_overlap_equals_python_set_reference(spark):
+    """The shared set-overlap core (c02/c15/c64/g15) against a plain
+    Python set computation, for all three pair forms its callers use:
+    ``<`` (unordered self-pairs), ``!=`` (ordered self-pairs) and none
+    (two-sided). A NULL block key must never pair -- not even with
+    another NULL-blocked set holding the same elements -- and an empty
+    side gives no rows."""
+    import operator
+
+    from pyspark.sql import functions as F
+
+    from dgraph_etl_spark.functions.dedup import jaccard, set_overlap
+
+    schema = "id bigint, sz int, blk string, g string"
+    a_sets = [
+        (1, "en", ["x", "y", "z"]),
+        (2, "en", ["x", "y", "w"]),
+        (3, "en", ["q"]),
+        (4, "de", ["x", "y", "z"]),
+        (5, None, ["x", "y", "z"]),
+        (6, None, ["x", "y", "z"]),
+        (7, "de", ["x", "v"]),
+    ]
+    b_sets = [
+        (1, "en", ["x", "y", "z"]),
+        (9, "en", ["y", "w", "u", "t"]),
+        (10, "de", ["v"]),
+        (11, None, ["x", "y", "z"]),
+        (12, "fr", ["x"]),
+    ]
+    a = spark.createDataFrame(_overlap_rows(a_sets), schema)
+    b = spark.createDataFrame(_overlap_rows(b_sets), schema)
+    empty = spark.createDataFrame([], schema)
+    cols = ["id_a", "id_b", "sz_a", "sz_b", "n_common"]
+    cases = [
+        (a, a, a_sets, a_sets, operator.lt),
+        (a, a, a_sets, a_sets, operator.ne),
+        (a, b, a_sets, b_sets, None),
+    ]
+    for left, right, ls, rs, pair in cases:
+        got = set_overlap(left, right, ["blk", "g"], pair).withColumn(
+            "j", jaccard(4)
+        )
+        assert got.columns == cols + ["j"]
+        rows = got.collect()
+        want = _overlap_ref(ls, rs, pair)
+        assert want, "reference lost its overlapping pairs"
+        assert {tuple(r)[:5] for r in rows} == want, pair
+        assert len(rows) == len(want), pair
+        for r in rows:
+            exact = r.n_common / (r.sz_a + r.sz_b - r.n_common)
+            assert abs(r.j - exact) <= 5e-5, r
+        assert not {(r.id_a, r.id_b) for r in rows} & {
+            (5, 6), (6, 5), (5, 11), (6, 11)
+        }, "NULL block keys paired"
+    for left, right in ((a, empty), (empty, b), (empty, empty)):
+        assert set_overlap(left, right, ["blk", "g"]).count() == 0
+    # one-key form (c64, g15): no block, so the NULL-blocked sets pair
+    n = set_overlap(a, a, ["g"], operator.lt).filter(
+        (F.col("id_a") == 5) & (F.col("id_b") == 6)
+    )
+    assert [tuple(r) for r in n.collect()] == [(5, 6, 3, 3, 3)]
+
+
 def test_c02_null_text_singletons_across_shingle_lanes(spark):
     """The NULL-text singleton contract holds in the SHINGLE lanes too:
     token_ngrams must not fabricate the [""] shingle (concat_ws over a

@@ -54,7 +54,12 @@ def main() -> None:
             ) from None
         done = _certified_names()
         pending = [q for q in order if q.name not in done][:cap]
-    spark = get_spark(app_name="precert")
+    # no console progress bar: its carriage returns splice into the
+    # "[i/N] name ok" verdict lines when stdout and stderr share a log
+    spark = get_spark(
+        app_name="precert",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     failures = []
     for i, q in enumerate(pending):

@@ -9,11 +9,25 @@ Scale design:
 - brute-force top-k is the exactness baseline: cosine expr +
   TakeOrderedAndProject (per-partition top-k, then merge of k-lists on
   the driver -- no global sort, scales linearly with rows/partitions).
-- ivf_topk is the 100 TB path: partition the corpus into coarse cells
-  (here: the label column as the cell id; at scale, k-means centroids
-  refreshed offline), keep a tiny centroid table, probe only the
-  nprobe nearest cells -> scanned fraction ~ nprobe/ncells. The
-  centroid table is broadcast; cell assignment is a narrow map.
+- the ANN family cuts what that exact step scans or how much each
+  scanned row costs: label IVF (ivf_topk, ivf_persisted_topk: the label
+  column as the cell id), learned IVF (kmeans_cells, ivf_kmeans_topk),
+  int8 (int8_topk), PQ (pq_topk), IVFPQ (ivfpq_topk), and the
+  sampled-codebook scale lanes (build_ivf_kmeans_index /
+  ivf_kmeans_scale_topk, build_ivfpq_index / ivfpq_scale_topk). The
+  100 TB path is the learned index with ~sqrt(N) cells persisted
+  PARTITIONED BY cell: a probe scans ~nprobe/ncells of the corpus.
+- every member is assembled from ONE copy of each step: the
+  fixed-point grid (fixed_point), the int64 folds (_isum, _idot,
+  _sq_dist, int_cosine), the nearest-code assignment against a
+  broadcast codebook (_nearest), the integer centroid update
+  (int_centroids, _lloyd_step), the top-nprobe cell probe
+  (_top_cells), and the top-topc approximate candidates with an exact
+  brute_topk re-rank (_rerank); the scale lanes share the numpy twins
+  _nearest_np and _top_cells_np. The Spark steps are exact integer
+  arithmetic, so every member is bit-identical across engines,
+  partitionings and retries -- what lets the DuckDB oracles certify
+  them by hash.
 - all-pairs similarity join is blocked (by label / LSH bucket) before
   the quadratic step: never cross-join the full corpus.
 """
@@ -196,24 +210,16 @@ def ivf_topk(
     ~sqrt(N) (the k-means codebook, kmeans_cells(k=...)) so pruning
     removes >90% of the scan."""
     cents = label_centroids(emb, vec_col)
-    probed = (
-        cents.crossJoin(F.broadcast(query))
-        .withColumn(
-            "csim",
-            # rounded before ranking (+ label tiebreak) so the probe
-            # set is reproducible across engines -- same convention as
-            # every certified cosine query
-            F.round(
-                cosine(as_double_array("centroid"), as_double_array("qvec")),
-                4,
-            ),
-        )
-        .orderBy(F.desc("csim"), "label")
-        .limit(nprobe)
-        .select("label")
-    )
+    probed = _top_cells(cents, query, "label", _label_csim(), nprobe)
     candidates = emb.join(F.broadcast(probed), "label", "left_semi")
     return brute_topk(candidates, query, k, vec_col)
+
+
+def _label_csim() -> Column:
+    """The label-cell probe score: the centroid-query cosine rounded to
+    4dp, the convention of every certified cosine query."""
+    c = cosine(as_double_array("centroid"), as_double_array("qvec"))
+    return F.round(c, 4)
 
 
 def blocked_similarity_join(
@@ -484,10 +490,7 @@ def srp_bands_fixedpoint(
         dim = len(first[0])
     bits_per_band = n_planes // n_bands
     planes = rademacher_planes(n_planes, dim, tag)
-    qv = F.transform(
-        as_double_array(vec_col), lambda x: F.round(x * scale).cast("long")
-    )
-    base = emb.select(*keep, vec_col, qv.alias("_qv"))
+    base = emb.select(*keep, vec_col, fixed_point(vec_col, scale).alias("_qv"))
     band_vals = []
     for b in range(n_bands):
         val = F.lit(0).cast("long")
@@ -496,11 +499,7 @@ def srp_bands_fixedpoint(
             lits = F.array(
                 *[F.lit(x).cast("long") for x in planes[p]]
             )
-            proj = F.aggregate(
-                F.zip_with(F.col("_qv"), lits, lambda a, r: a * r),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
+            proj = _idot(F.col("_qv"), lits)
             val = val + F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
@@ -705,39 +704,71 @@ def hard_negatives_exact(
     )
 
 
-def quantize_vectors(
-    emb: DataFrame, scale: int = 1_000_000, vec_col: str = "embedding"
-) -> DataFrame:
-    """Fixed-point view of the corpus: each float component becomes
-    round(x * scale) as a 64-bit integer. Every distance / centroid
-    computation downstream is then EXACT integer arithmetic -- the
-    property that makes an iterative clustering reproducible bit-for-bit
-    across engines, partitionings, and retries (IEEE float sums are
-    order-dependent; integer sums are not). With unit-norm-ish
-    embeddings and scale 1e6, a squared distance is bounded by
-    dim * (2*scale)^2 ~ 2.6e14 << 2^63."""
-    q = F.transform(
-        as_double_array(vec_col), lambda x: F.round(x * scale).cast("long")
+# ------------------------------------------------------------- ANN core
+# One copy of each integer-exact step; every ANN member below (and the
+# s17 / c59 suite queries) is assembled from these.
+
+
+def fixed_point(col: Column | str, scale: int) -> Column:
+    """The fixed-point grid: each component becomes round(x * scale) as
+    a 64-bit integer, so every distance / centroid computation
+    downstream is EXACT integer arithmetic."""
+    return F.transform(
+        as_double_array(col), lambda x: F.round(x * scale).cast("long")
     )
-    return emb.select("vec_id", q.alias("qv"))
+
+
+def _isum(a: Column) -> Column:
+    """Exact int64 fold of an integer array."""
+    return F.aggregate(a, F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+
+def _idot(a: Column, b: Column) -> Column:
+    """Σ a_i*b_i over integer components -- exact."""
+    return _isum(F.zip_with(a, b, lambda x, y: x * y))
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
     """Σ (a_i - b_i)^2 over integer components -- exact."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return _isum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+
+
+def int_cosine(a: Column, b: Column) -> Column:
+    """Cosine over quantized integer vectors: dot and squared norms are
+    EXACT integer folds; the single float op is one divide over two
+    sqrts of exact operands -- the same doubles on every engine, so the
+    rounded value is hash-stable (cosine is scale-invariant, so the
+    quantized cosine equals the float cosine up to quantization)."""
+    na = F.sqrt(_isum(F.transform(a, lambda x: x * x)).cast("double"))
+    nb = F.sqrt(_isum(F.transform(b, lambda x: x * x)).cast("double"))
+    # try_divide, not '/': an all-zero quantized vector (every
+    # component's magnitude < qmax/254) would otherwise 0/0 -- a
+    # DIVIDE_BY_ZERO abort under the pinned ANSI mode, or a NaN that
+    # sorts FIRST under desc and displaces a real neighbor. NULL is
+    # the module-wide zero-norm contract (cosine() above).
+    return F.try_divide(_idot(a, b).cast("double"), na * nb)
+
+
+def quantize_vectors(
+    emb: DataFrame, scale: int = 1_000_000, vec_col: str = "embedding"
+) -> DataFrame:
+    """Fixed-point view of the corpus, ``(vec_id, qv)`` -- the property
+    that makes an iterative clustering reproducible bit-for-bit across
+    engines, partitionings, and retries (IEEE float sums are
+    order-dependent; integer sums are not). With unit-norm-ish
+    embeddings and scale 1e6, a squared distance is bounded by
+    dim * (2*scale)^2 ~ 2.6e14 << 2^63."""
+    return emb.select("vec_id", fixed_point(vec_col, scale).alias("qv"))
 
 
 def _md5_seeds(q: DataFrame, k: int) -> DataFrame:
-    """Deterministic k-means seeding shared by the IVF cell trainer and
-    the PQ codebook trainer: the k corpus rows with the smallest
-    md5(vec_id) (engine/partitioning/retry-independent, and replayable
-    in the DuckDB oracles), tagged with their 0-based seed ordinal as
-    ``seed_ord``. ONE copy: a seeding change must not drift between
-    the two trainers whose oracles assume the same discipline."""
+    """Deterministic k-means seeding of every fixed-point trainer (the
+    IVF cells of _kmeans_loop, the PQ codebooks of _pq_adc): the k
+    corpus rows with the smallest md5(vec_id) (engine/partitioning/
+    retry-independent, and replayable in the DuckDB oracles), tagged
+    with their 0-based seed ordinal as ``seed_ord``. ONE copy: a
+    seeding change must not drift between trainers whose oracles assume
+    the same discipline."""
     from pyspark.sql import Window
 
     seeds = (
@@ -752,60 +783,76 @@ def _md5_seeds(q: DataFrame, k: int) -> DataFrame:
 
 
 def _int_mean(s: Column, n: Column) -> Column:
-    """Round-half-UP integer mean floor((2s+n)/(2n)) -- the centroid
-    update rule shared by both Lloyd trainers. The doubles are exact
-    here (sums bounded well under 2^53, kmeans_cells' documented
+    """Round-half-UP integer mean floor((2s+n)/(2n)). The doubles are
+    exact here (sums bounded well under 2^53, kmeans_cells' documented
     bound), and half-up matches the oracles' replay of the same
     expression."""
     return F.floor((2.0 * s + n) / (2.0 * n)).cast("long")
 
 
-def _kmeans_loop(q: DataFrame, k: int, n_iter: int):
-    """Shared Lloyd iteration over quantized vectors ``(vec_id, qv)``.
-    Returns ``(cents, assign)``: the post-iteration integer centroid
-    table ``(cell, cv)`` and the final hard assignment ``(vec_id,
-    cell)`` against it."""
+def int_centroids(rel: DataFrame, keys, vec: str) -> DataFrame:
+    """``(*keys, cv)``: the integer mean of the int64 vectors ``vec``
+    per ``keys`` -- exact per-(key, pos) sums, re-assembled in pos
+    order. The mean is aliased ``mu``, never ``m``: a PQ codebook is
+    keyed by its subspace column ``m``."""
+    comp = (
+        rel.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+        .withColumn("mu", _int_mean(F.col("s"), F.col("n")))
+    )
+    return comp.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "mu"))),
+            lambda s: s["mu"],
+        ).alias("cv")
+    )
+
+
+def _nearest(rel, codebook, keys, vec: str, code: str, on=()) -> DataFrame:
+    """Nearest ``code`` of the broadcast ``codebook`` (``*on``, ``code``,
+    ``cv``) for each row of ``rel`` (``*keys``, ``*on``, ``vec``), by
+    exact squared distance, ties to the smaller code. Returns
+    (``*keys``, ``*on``, ``code``, ``vec``): the member vector rides
+    along for _lloyd_step, and a projection that drops it prunes it."""
+    on = list(on)
+    b = F.broadcast(codebook)
+    scored = (rel.join(b, on) if on else rel.crossJoin(b)).withColumn(
+        "dist", _sq_dist(F.col(vec), F.col("cv"))
+    )
+    return scored.groupBy(*keys, *on).agg(
+        F.min(F.struct("dist", code))[code].alias(code),
+        F.first(vec).alias(vec),
+    )
+
+
+def _lloyd_step(rel, cents, keys, vec: str, code: str, on=()) -> DataFrame:
+    """One integer Lloyd round over ``rel``: assign, recompute each
+    code's centroid, and keep the previous centroid of a code that drew
+    no members (LEFT join + COALESCE, so the codebook never silently
+    shrinks). Returns the new codebook, localCheckpoint'ed to truncate
+    the growing lineage."""
+    key = [*on, code]
+    new = int_centroids(_nearest(rel, cents, keys, vec, code, on), key, vec)
+    return (
+        cents.join(new.withColumnRenamed("cv", "cv_new"), key, "left")
+        .select(*key, F.coalesce("cv_new", "cv").alias("cv"))
+        .localCheckpoint()
+    )
+
+
+def _kmeans_loop(emb, k: int, n_iter: int, scale: int, vec_col="embedding"):
+    """Lloyd's k-means over the fixed-point corpus. Returns ``(cents,
+    assign)``: the post-iteration integer centroid table ``(cell, cv)``
+    and the final hard assignment ``(vec_id, cell)`` against it."""
+    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
     cents = _md5_seeds(q, k).select(
         F.col("seed_ord").alias("cell"), F.col("qv").alias("cv")
     ).localCheckpoint()
-
     for _ in range(n_iter):
-        scored = q.crossJoin(F.broadcast(cents)).withColumn(
-            "dist", _sq_dist(F.col("qv"), F.col("cv"))
-        )
-        assigned = scored.groupBy("vec_id").agg(
-            F.min(F.struct("dist", "cell"))["cell"].alias("cell"),
-            F.first("qv").alias("qv"),
-        )
-        comp = assigned.select(
-            "cell", F.posexplode("qv").alias("pos", "x")
-        ).groupBy("cell", "pos").agg(
-            F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        new_cents = (
-            comp.withColumn(
-                "m", _int_mean(F.col("s"), F.col("n"))
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv_new")
-            )
-        )
-        cents = (
-            cents.join(new_cents, "cell", "left")
-            .select("cell", F.coalesce("cv_new", "cv").alias("cv"))
-            .localCheckpoint()
-        )
-    scored = q.crossJoin(F.broadcast(cents)).withColumn(
-        "dist", _sq_dist(F.col("qv"), F.col("cv"))
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.min(F.struct("dist", "cell"))["cell"].alias("cell")
-    )
-    return cents, assign
+        cents = _lloyd_step(q, cents, ["vec_id"], "qv", "cell")
+    assign = _nearest(q, cents, ["vec_id"], "qv", "cell")
+    return cents, assign.select("vec_id", "cell")
 
 
 def kmeans_cells(
@@ -843,42 +890,44 @@ def kmeans_cells(
 
     Empty cells keep their previous centroid (COALESCE on the left
     join), so k never silently shrinks."""
-    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
-    _, assign = _kmeans_loop(q, k, n_iter)
-    return assign
+    return _kmeans_loop(emb, k, n_iter, scale, vec_col)[1]
 
 
-def _int_cosine(a: Column, b: Column) -> Column:
-    """Cosine over quantized integer vectors: dot and squared norms are
-    EXACT integer folds; the single float op is one divide over two
-    sqrts of exact operands -- the same doubles on every engine, so the
-    rounded value is hash-stable (cosine is scale-invariant, so the
-    quantized cosine equals the float cosine up to quantization)."""
-    d = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
-    na = F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
+def _top_cells(cents, query, key: str, sim: Column, nprobe: int) -> DataFrame:
+    """The ``key`` of the ``nprobe`` rows of the (tiny) centroid table
+    ``cents`` scoring highest by ``sim`` against the 1-row ``query``;
+    ``sim`` comes rounded and ties go to the smaller ``key``, so the
+    probe set is reproducible across engines."""
+    return (
+        cents.crossJoin(F.broadcast(query))
+        .withColumn("csim", sim)
+        .orderBy(F.desc("csim"), key)
+        .limit(nprobe)
+        .select(key)
     )
-    nb = F.sqrt(
-        F.aggregate(
-            F.transform(b, lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    )
-    # try_divide, not '/': an all-zero quantized vector (every
-    # component's magnitude < qmax/254) would otherwise 0/0 -- a
-    # DIVIDE_BY_ZERO abort under the pinned ANSI mode, or a NaN that
-    # sorts FIRST under desc and displaces a real neighbor. NULL is
-    # the module-wide zero-norm contract (cosine() above).
-    return F.try_divide(d, na * nb)
+
+
+def _learned_ivf_cells(emb, query, ncells, n_iter, nprobe, scale, vec_col):
+    """The learned-IVF probe of c51 and c63: ``(vec_id, cell)`` of the
+    vectors in the ``nprobe`` k-means cells whose QUANTIZED centroids
+    are most query-similar (round(int_cosine, 6)), so cell selection,
+    like the assignment itself, is bit-for-bit reproducible."""
+    cents, cells = _kmeans_loop(emb, ncells, n_iter, scale, vec_col)
+    qint = query.select(fixed_point("qvec", scale).alias("qint"))
+    sim = F.round(int_cosine(F.col("cv"), F.col("qint")), 6)
+    probed = _top_cells(cents, qint, "cell", sim, nprobe)
+    return cells.join(F.broadcast(probed), "cell", "left_semi")
+
+
+def _rerank(approx, topc: int, emb, query, k: int, vec_col: str) -> DataFrame:
+    """Exact re-rank (brute_topk over ``emb``) of the ``topc`` best
+    approximate candidates ``(vec_id, adc_sim)``, ties by vec_id; with
+    ``emb=None``, the top ``k`` approximate rows as they are."""
+    cands = approx.orderBy(F.desc("adc_sim"), "vec_id").limit(topc)
+    if emb is None:
+        return cands.limit(k)
+    reranked = emb.join(F.broadcast(cands), "vec_id", "left_semi")
+    return brute_topk(reranked, query, k, vec_col)
 
 
 def ivf_kmeans_topk(
@@ -898,29 +947,11 @@ def ivf_kmeans_topk(
     assignment is written PARTITIONED BY cell (build_ivf_index) and the
     probe prunes partitions at the scan.
 
-    The probe similarity is computed over the QUANTIZED integer
-    centroids and query (round(csim, 6), ties by cell id), so cell
-    selection -- like the assignment itself -- is reproducible
+    The probe is _learned_ivf_cells' fixed-point one, reproducible
     bit-for-bit across engines; only the final re-rank touches the
     original float vectors (round(sim, 4), the c04 convention)."""
-    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
-    cents, cells = _kmeans_loop(q, ncells, n_iter)
-    qv_int = query.select(
-        F.transform(
-            as_double_array("qvec"), lambda x: F.round(x * scale).cast("long")
-        ).alias("qint")
-    )
-    probed = (
-        cents.crossJoin(F.broadcast(qv_int))
-        .withColumn("csim", F.round(_int_cosine(F.col("cv"), F.col("qint")), 6))
-        .orderBy(F.desc("csim"), "cell")
-        .limit(nprobe)
-        .select("cell")
-    )
-    candidates = emb.join(cells, "vec_id").join(
-        F.broadcast(probed), "cell", "left_semi"
-    )
-    return brute_topk(candidates, query, k, vec_col)
+    cells = _learned_ivf_cells(emb, query, ncells, n_iter, nprobe, scale, vec_col)
+    return brute_topk(emb.join(cells, "vec_id"), query, k, vec_col)
 
 
 def build_ivf_index(emb: DataFrame, path: str) -> None:
@@ -972,21 +1003,8 @@ def ivf_persisted_topk(
     if cents is None:
         cents = label_centroids(index, vec_col).cache()
         _PERSISTED_CENTROIDS[ckey] = cents
-    probed = [
-        r["label"]
-        for r in cents.crossJoin(F.broadcast(query))
-        .withColumn(
-            "csim",
-            F.round(
-                cosine(as_double_array("centroid"), as_double_array("qvec")),
-                4,
-            ),
-        )
-        .orderBy(F.desc("csim"), "label")
-        .limit(nprobe)
-        .select("label")
-        .collect()
-    ]
+    probed = _top_cells(cents, query, "label", _label_csim(), nprobe)
+    probed = [r["label"] for r in probed.collect()]
     candidates = index.filter(F.col("label").isin(probed))
     return brute_topk(candidates, query, k, vec_col)
 
@@ -1096,15 +1114,20 @@ def int8_quantize(
         ).alias("qmax")
     )
     quant = q.crossJoin(F.broadcast(qmax_row)).select(
-        "vec_id",
-        F.transform(
-            F.col("qv"),
-            lambda x: F.floor(
-                (254.0 * x + F.col("qmax")) / (2.0 * F.col("qmax"))
-            ).cast("long"),
-        ).alias("v8"),
+        "vec_id", _int8_grid("qv").alias("v8")
     )
     return quant, qmax_row
+
+
+def _int8_grid(qv: str) -> Column:
+    """round-half-up(127 * q / qmax) per component of the fixed-point
+    array ``qv``, against the ``qmax`` column in the same row."""
+    return F.transform(
+        F.col(qv),
+        lambda x: F.floor(
+            (254.0 * x + F.col("qmax")) / (2.0 * F.col("qmax"))
+        ).cast("long"),
+    )
 
 
 def int8_topk(
@@ -1113,31 +1136,19 @@ def int8_topk(
     """Top-k by int8 cosine over the quantized corpus -- the
     compressed-index ANN path. The query is quantized on the SAME
     grid; dot and squared norms are exact integer folds; the one float
-    step is a divide over two sqrts of exact operands (the _int_cosine
-    pattern), so the ranking -- ties broken by vec_id -- is
-    reproducible bit-for-bit across engines. Re-rank survivors against
-    the float vectors when calibrated scores are needed (c04)."""
+    step is a divide over two sqrts of exact operands (int_cosine), so
+    the ranking -- ties broken by vec_id -- is reproducible bit-for-bit
+    across engines. Re-rank survivors against the float vectors when
+    calibrated scores are needed (c04)."""
     quant, qmax_row = int8_quantize(emb, vec_col=vec_col)
     qq = (
-        query.select(
-            F.transform(
-                as_double_array("qvec"),
-                lambda x: F.round(x * 1_000_000).cast("long"),
-            ).alias("qv")
-        )
+        query.select(fixed_point("qvec", 1_000_000).alias("qv"))
         .crossJoin(F.broadcast(qmax_row))
-        .select(
-            F.transform(
-                F.col("qv"),
-                lambda x: F.floor(
-                    (254.0 * x + F.col("qmax")) / (2.0 * F.col("qmax"))
-                ).cast("long"),
-            ).alias("qq8")
-        )
+        .select(_int8_grid("qv").alias("qq8"))
     )
     scored = quant.crossJoin(F.broadcast(qq)).select(
         "vec_id",
-        F.round(_int_cosine(F.col("v8"), F.col("qq8")), 6).alias("sim8"),
+        F.round(int_cosine(F.col("v8"), F.col("qq8")), 6).alias("sim8"),
     )
     return scored.orderBy(F.desc("sim8"), "vec_id").limit(k)
 
@@ -1197,9 +1208,7 @@ def pq_topk(
     ADC scan reads 8 bytes/vector and the re-rank touches ``topc``
     rows. Recall is property-tested (tests/test_properties.py)."""
     approx = _pq_adc(emb, query, m_sub, k_codes, n_iter, scale, vec_col)
-    cands = approx.orderBy(F.desc("adc_sim"), "vec_id").limit(topc)
-    reranked = emb.join(F.broadcast(cands), "vec_id", "left_semi")
-    return brute_topk(reranked, query, k, vec_col)
+    return _rerank(approx, topc, emb, query, k, vec_col)
 
 
 def _pq_adc(
@@ -1223,79 +1232,30 @@ def _pq_adc(
     sees the full corpus (the codebook is a function of the corpus,
     pinned by the unrolled oracle), and restricting the per-vector
     scoring commutes with the vec_id semi-join, so results are
-    identical."""
-    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
-    sd = F.floor(F.size("qv") / m_sub).cast("int")
-    subs = q.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-        F.col("qv"),
-    ).select(
-        "vec_id",
-        "m",
-        F.slice(F.col("qv"), F.col("m") * sd + 1, sd).alias("sv"),
-    )
+    identical.
 
-    seed_codes = _md5_seeds(q, k_codes).select(
-        F.col("seed_ord").alias("code"), "qv"
-    )
-    cents = (
-        seed_codes.select(
-            "code",
+    A dim that ``m_sub`` does not divide is refused (build_ivfpq_index's
+    rule): the split would silently drop the trailing components."""
+    dim = len(emb.select(vec_col).first()[0])
+    if dim % m_sub:
+        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+
+    sd = dim // m_sub
+
+    def split(rel, keep, vec, out):
+        # one row per subspace m holding the m-th of m_sub slices
+        return rel.select(
+            *keep,
             F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-            F.col("qv"),
-        )
-        .select(
-            "m",
-            "code",
-            F.slice(
-                F.col("qv"),
-                F.col("m") * F.floor(F.size("qv") / m_sub).cast("int") + 1,
-                F.floor(F.size("qv") / m_sub).cast("int"),
-            ).alias("cv"),
-        )
-        .localCheckpoint()
-    )
+            F.col(vec),
+        ).select(*keep, "m", F.slice(vec, F.col("m") * sd + 1, sd).alias(out))
 
-    def assign(codebook, rel=None):
-        scored = (rel if rel is not None else subs).join(
-            F.broadcast(codebook), "m"
-        ).withColumn(
-            "dist", _sq_dist(F.col("sv"), F.col("cv"))
-        )
-        return scored.groupBy("vec_id", "m").agg(
-            F.min(F.struct("dist", "code"))["code"].alias("code"),
-            F.first("sv").alias("sv"),
-        )
-
+    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
+    subs = split(q, ["vec_id"], "qv", "sv")
+    seeds = _md5_seeds(q, k_codes).select(F.col("seed_ord").alias("code"), "qv")
+    cents = split(seeds, ["code"], "qv", "cv").localCheckpoint()
     for _ in range(n_iter):
-        assigned = assign(cents)
-        comp = (
-            assigned.select(
-                "m", "code", F.posexplode("sv").alias("pos", "x")
-            )
-            .groupBy("m", "code", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        new_cents = (
-            comp.withColumn(
-                "mu", _int_mean(F.col("s"), F.col("n"))
-            )
-            .groupBy("m", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s["mu"],
-                ).alias("cv_new")
-            )
-        )
-        cents = (
-            cents.join(new_cents, ["m", "code"], "left")
-            .select(
-                "m", "code", F.coalesce("cv_new", "cv").alias("cv")
-            )
-            .localCheckpoint()
-        )
+        cents = _lloyd_step(subs, cents, ["vec_id"], "sv", "code", on=["m"])
 
     # the final ENCODE pass is scoped to the probe set too (the Lloyd
     # training rounds above always saw the full corpus): the per-vector
@@ -1304,36 +1264,19 @@ def _pq_adc(
     enc_subs = (
         subs if scope is None else subs.join(scope, "vec_id", "left_semi")
     )
-    codes = assign(cents, rel=enc_subs).select("vec_id", "m", "code")
+    codes = _nearest(enc_subs, cents, ["vec_id"], "sv", "code", on=["m"])
 
-    qv = quantize_vectors(
-        query.select(F.lit(-1).alias("vec_id"), F.col("qvec")), scale, "qvec"
-    ).select(F.col("qv").alias("qq"))
-    qsubs = qv.select(
-        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-        F.col("qq"),
-    ).select(
-        "m",
-        F.slice(
-            F.col("qq"),
-            F.col("m") * F.floor(F.size("qq") / m_sub).cast("int") + 1,
-            F.floor(F.size("qq") / m_sub).cast("int"),
-        ).alias("qsv"),
-    )
-    int_dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    adc_table = cents.join(F.broadcast(qsubs), "m").select(
+    qv = query.select(fixed_point("qvec", scale).alias("qq"))
+    adc_table = cents.join(F.broadcast(split(qv, [], "qq", "qsv")), "m").select(
         "m",
         "code",
-        int_dot(F.col("cv"), F.col("qsv")).alias("pdot"),
-        int_dot(F.col("cv"), F.col("cv")).alias("pnorm"),
+        _idot(F.col("cv"), F.col("qsv")).alias("pdot"),
+        _idot(F.col("cv"), F.col("cv")).alias("pnorm"),
     )
-    qnorm = qv.select(int_dot(F.col("qq"), F.col("qq")).alias("qn"))
+    qnorm = qv.select(_idot(F.col("qq"), F.col("qq")).alias("qn"))
     return (
-        codes.join(F.broadcast(adc_table), ["m", "code"])
+        codes.select("vec_id", "m", "code")
+        .join(F.broadcast(adc_table), ["m", "code"])
         .groupBy("vec_id")
         .agg(
             F.sum("pdot").alias("dot_adc"),
@@ -1388,32 +1331,14 @@ def ivfpq_topk(
     choice, codes, candidate set, and ranking are engine-exact and
     the whole composition is hash-certified against the two unrolled
     oracles joined (suites/llm_extensions.py c63)."""
-    q = quantize_vectors(emb, scale, vec_col).localCheckpoint()
-    cents, cells = _kmeans_loop(q, ncells, km_iter)
-    qv_int = query.select(
-        F.transform(
-            as_double_array("qvec"), lambda x: F.round(x * scale).cast("long")
-        ).alias("qint")
-    )
-    probed = (
-        cents.crossJoin(F.broadcast(qv_int))
-        .withColumn(
-            "csim", F.round(_int_cosine(F.col("cv"), F.col("qint")), 6)
-        )
-        .orderBy(F.desc("csim"), "cell")
-        .limit(nprobe)
-        .select("cell")
-    )
-    in_cells = cells.join(F.broadcast(probed), "cell", "left_semi")
+    in_cells = _learned_ivf_cells(emb, query, ncells, km_iter, nprobe, scale, vec_col)
     # the probe set scopes the ADC scoring INSIDE _pq_adc (encode/score
     # only probed vectors); scoring everything and semi-joining after
     # threw away (ncells - nprobe)/ncells of the dominant scan
     approx = _pq_adc(
         emb, query, m_sub, k_codes, pq_iter, scale, vec_col, scope=in_cells
     )
-    cands = approx.orderBy(F.desc("adc_sim"), "vec_id").limit(topc)
-    reranked = emb.join(F.broadcast(cands), "vec_id", "left_semi")
-    return brute_topk(reranked, query, k, vec_col)
+    return _rerank(approx, topc, emb, query, k, vec_col)
 
 
 def pq_oracle_ctes(
@@ -1653,18 +1578,38 @@ def _lloyd_np(x, k: int, n_iter: int):
     k = min(k, n)
     cents = x[:k].copy()
     for _ in range(n_iter):
-        # chunked argmin over squared L2: |x|^2 - 2 x.c + |c|^2
-        c2 = (cents * cents).sum(axis=1)
-        assign = np.empty(n, dtype=np.int64)
-        for lo in range(0, n, 65536):
-            chunk = x[lo : lo + 65536]
-            d = c2[None, :] - 2.0 * (chunk @ cents.T)
-            assign[lo : lo + len(chunk)] = np.argmin(d, axis=1)
+        assign = np.concatenate(
+            [_nearest_np(x[lo : lo + 65536], cents) for lo in range(0, n, 65536)]
+        )
         for c in range(k):
             members = x[assign == c]
             if len(members):
                 cents[c] = members.mean(axis=0)
     return cents
+
+
+def _nearest_np(x, cents):
+    """Row-wise argmin over squared L2 to the rows of ``cents``:
+    |x|^2 - 2 x.c + |c|^2 with the row-constant |x|^2 dropped; ties go
+    to the smaller index (np.argmin)."""
+    import numpy as np
+
+    c2 = (cents * cents).sum(axis=1)
+    return np.argmin(c2[None, :] - 2.0 * (x @ cents.T), axis=1)
+
+
+def _top_cells_np(cents, q, nprobe: int) -> list[int]:
+    """The driver-side cell probe of the scale lanes: the ``nprobe``
+    rows of ``cents`` with the highest float cosine to ``q``; a
+    zero-norm centroid or query ranks last."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = (cents @ q) / (
+            np.linalg.norm(cents, axis=1) * np.linalg.norm(q)
+        )
+    sims = np.nan_to_num(sims, nan=-np.inf)
+    return [int(c) for c in np.argsort(-sims)[:nprobe]]
 
 
 def assign_cells_arrow(emb, codebook, vec_col: str = "embedding"):
@@ -1698,16 +1643,13 @@ def assign_cells_arrow(emb, codebook, vec_col: str = "embedding"):
     )
 
     def assign(batches):
-        cents = bc.value
-        c2 = (cents * cents).sum(axis=1)
         for pdf in batches:
             m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d = c2[None, :] - 2.0 * (m @ cents.T)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].values,
                     vec_col: pdf[vec_col].values,
-                    "cell": np.argmin(d, axis=1).astype(np.int32),
+                    "cell": _nearest_np(m, bc.value).astype(np.int32),
                 }
             )
 
@@ -1836,12 +1778,7 @@ def ivf_kmeans_scale_topk(
 
     cents = np.load(os.path.join(path, "centroids.npy"))
     q = np.asarray(query.select("qvec").first()["qvec"], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = (cents @ q) / (
-            np.linalg.norm(cents, axis=1) * np.linalg.norm(q)
-        )
-    sims = np.nan_to_num(sims, nan=-np.inf)
-    probed = [int(c) for c in np.argsort(-sims)[:nprobe]]
+    probed = _top_cells_np(cents, q, nprobe)
     index = open_ivf_kmeans_index(spark, path)
     candidates = index.filter(F.col("cell").isin(probed))
     return brute_topk(candidates, query, k, vec_col)
@@ -1917,23 +1854,16 @@ def build_ivfpq_index(
 
         def encode(batches):
             co, cbs = bc.value
-            co2 = (co * co).sum(axis=1) if co is not None else None
-            cb2 = [(cb * cb).sum(axis=1) for cb in cbs]
             for pdf in batches:
                 mvec = np.array(pdf[vec_col].tolist(), dtype=np.float64)
                 cell = (
-                    np.argmin(
-                        co2[None, :] - 2.0 * (mvec @ co.T), axis=1
-                    ).astype(np.int32)
+                    _nearest_np(mvec, co).astype(np.int32)
                     if co is not None
                     else np.zeros(len(mvec), dtype=np.int32)
                 )
                 codes = np.empty((len(mvec), len(cbs)), dtype=np.int16)
                 for m, cb in enumerate(cbs):
-                    sub = mvec[:, m * sd : (m + 1) * sd]
-                    codes[:, m] = np.argmin(
-                        cb2[m][None, :] - 2.0 * (sub @ cb.T), axis=1
-                    )
+                    codes[:, m] = _nearest_np(mvec[:, m * sd : (m + 1) * sd], cb)
                 yield pd.DataFrame(
                     {
                         "vec_id": pdf["vec_id"].values,
@@ -1992,13 +1922,7 @@ def ivfpq_scale_topk(
     index = open_ivf_kmeans_index(spark, path)
     q = np.asarray(query.select("qvec").first()["qvec"], dtype=np.float64)
     if os.path.exists(cb_path) and nprobe > 0:
-        cents = np.load(cb_path)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (cents @ q) / (
-                np.linalg.norm(cents, axis=1) * np.linalg.norm(q)
-            )
-        sims = np.nan_to_num(sims, nan=-np.inf)
-        probed = [int(c) for c in np.argsort(-sims)[:nprobe]]
+        probed = _top_cells_np(np.load(cb_path), q, nprobe)
         index = index.filter(F.col("cell").isin(probed))
 
     m_sub, k_codes, sd = pq.shape
@@ -2047,8 +1971,4 @@ def ivfpq_scale_topk(
             )
 
     approx = index.select("vec_id", "codes").mapInPandas(score, schema)
-    cands = approx.orderBy(F.desc("adc_sim"), "vec_id").limit(topc)
-    if rerank_emb is None:
-        return cands.limit(k)
-    reranked = rerank_emb.join(F.broadcast(cands), "vec_id", "left_semi")
-    return brute_topk(reranked, query, k, vec_col)
+    return _rerank(approx, topc, rerank_emb, query, k, vec_col)

@@ -21,13 +21,13 @@ Bucket counts must match on both sides for the exchange to be elided.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import staging
 
 # Concurrent queries may race to materialize the same table:
 # tableExists is false for both, and two simultaneous saveAsTable
@@ -47,26 +47,6 @@ _CREATE_LOCKS_GUARD = threading.Lock()
 def _create_lock(name: str) -> threading.Lock:
     with _CREATE_LOCKS_GUARD:
         return _CREATE_LOCKS.setdefault(name, threading.Lock())
-
-
-# Scratch roots this process created. Only this process's in-memory
-# catalog can name their tables, so their files are removed at
-# interpreter exit; a forked child inherits the handler, hence the
-# pid-keyed prefix check.
-_ROOTS: set[str] = set()
-
-
-@atexit.register
-def _remove_roots() -> None:
-    for root in _ROOTS:
-        if root.startswith(_root_prefix()):
-            shutil.rmtree(root, ignore_errors=True)
-
-
-def _root_prefix() -> str:
-    return os.path.join(
-        tempfile.gettempdir(), f"dgraph_etl_bucketed_{os.getpid()}_"
-    )
 
 
 def bucketed_table(
@@ -101,8 +81,14 @@ def bucketed_table(
             # shared (SharedState), but each creator stages its data
             # under its own root so a dying session's half-written
             # files can never be what a fresh creation renames over
-            root = f"{_root_prefix()}{id(spark)}"
-            _ROOTS.add(root)
+            # only this process's in-memory catalog can name the
+            # tables: the root goes when the process exits
+            root = staging.remove_at_exit(
+                os.path.join(
+                    staging.root(),
+                    f"dgraph_etl_bucketed_{os.getpid()}_{id(spark)}",
+                )
+            )
             path = os.path.join(root, name)
             (
                 # repartition by the bucket key first: each bucket's rows

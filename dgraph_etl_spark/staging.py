@@ -19,11 +19,14 @@ module:
   write the completion marker last, rename into place;
 - ``stage(kind, sf_dir, tables, build, suffix)``: name the artifact
   from the key, publish it, then evict superseded generations of the
-  same kind and source once they are older than the grace period.
+  same kind and source once they are older than the grace period;
+- ``remove_at_exit(path)``: a per-process root (bucketed tables,
+  streaming state) that nothing outlives the process to read.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import re
@@ -37,6 +40,25 @@ from .catalog import table_path
 
 def root() -> str:
     return tempfile.gettempdir()
+
+
+# (pid, root) of every per-process scratch root; a forked child
+# inherits the set and the exit handler, hence the pid check.
+_PROCESS_ROOTS: set[tuple[int, str]] = set()
+
+
+def remove_at_exit(path: str) -> str:
+    """Register ``path`` for removal when this process exits; returns
+    it."""
+    _PROCESS_ROOTS.add((os.getpid(), path))
+    return path
+
+
+@atexit.register
+def _remove_process_roots() -> None:
+    for pid, path in _PROCESS_ROOTS:
+        if pid == os.getpid():
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def source_tag(sf_dir: str) -> str:

@@ -32,7 +32,7 @@ from ..catalog import (
     ts_bigint_unit,
 )
 from ..session import SessionKeyedMap
-from ..staging import MARKER, stage
+from ..staging import MARKER, remove_at_exit, stage
 
 _MEM_IDS = itertools.count()
 
@@ -389,13 +389,14 @@ def scratch_state_root(query: str) -> str:
     cumulative edge-table versions plus a checkpoint) every run, /tmp
     growing without bound. Cleanup happens at the START of the next
     run, not the end of this one, because the query's returned
-    DataFrame lazily reads these files until the caller collects it."""
+    DataFrame lazily reads these files until the caller collects it.
+    The last generation goes when the process exits."""
     root = os.path.join(
         tempfile.gettempdir(), f"dgraph_etl_fb_{query}_{os.getpid()}"
     )
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
-    return root
+    return remove_at_exit(root)
 
 
 def run_foreach_batch(stream_df, fn, state_root: str) -> None:

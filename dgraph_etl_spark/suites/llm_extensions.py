@@ -3484,28 +3484,9 @@ def c59_source_centroid_drift(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "source")
     emb = _emb(spark, sf_dir)
     de = docs.join(emb, docs["doc_id"] == emb["vec_id"]).select(
-        "source",
-        F.transform(
-            S.as_double_array("embedding"),
-            lambda x: F.round(x * 1_000_000).cast("long"),
-        ).alias("qv"),
+        "source", S.fixed_point("embedding", 1_000_000).alias("qv")
     )
-    comp = (
-        de.select("source", F.posexplode("qv").alias("pos", "x"))
-        .groupBy("source", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    cents = comp.withColumn(
-        "m",
-        F.floor((2.0 * F.col("s") + F.col("n")) / (2.0 * F.col("n"))).cast(
-            "long"
-        ),
-    ).groupBy("source").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s_: s_["m"],
-        ).alias("cv")
-    ).localCheckpoint(eager=False)
+    cents = S.int_centroids(de, ["source"], "qv").localCheckpoint(eager=False)
     # ^ cents feeds BOTH sides of the pairwise self-join below:
     # uncheckpointed, Catalyst re-plans the docs-join + posexplode +
     # centroid agg subtree per side (audited: docs and embeddings each
@@ -3518,30 +3499,15 @@ def c59_source_centroid_drift(spark, sf_dir):
     b = cents.select(
         F.col("source").alias("source_b"), F.col("cv").alias("cvb")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("cva"), F.col("cvb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
-    sq = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    )
-    return (
-        a.join(b, F.col("source_a") < F.col("source_b"))
-        .select(
-            "source_a",
-            "source_b",
-            # try_divide: a zero-norm source centroid (all component
-            # means floor to 0) must yield NULL like the oracle's
-            # x/0 -> NULL, not an ANSI DIVIDE_BY_ZERO abort
-            F.round(
-                F.try_divide(dot, sq(F.col("cva")) * sq(F.col("cvb"))), 6
-            ).alias("centroid_cosine"),
-        )
+    return a.join(b, F.col("source_a") < F.col("source_b")).select(
+        "source_a",
+        "source_b",
+        # int_cosine's try_divide: a zero-norm source centroid (all
+        # component means floor to 0) yields NULL like the oracle's
+        # x/0 -> NULL, not an ANSI DIVIDE_BY_ZERO abort
+        F.round(S.int_cosine(F.col("cva"), F.col("cvb")), 6).alias(
+            "centroid_cosine"
+        ),
     )
 
 

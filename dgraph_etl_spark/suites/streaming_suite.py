@@ -854,7 +854,7 @@ def s17_stream_ann_ingest(spark, sf_dir):
     from ..catalog import register_views
     from ..functions.similarity import (
         _kmeans_loop,
-        _sq_dist,
+        _nearest,
         quantize_vectors,
     )
     from ..streaming.core import (
@@ -867,9 +867,7 @@ def s17_stream_ann_ingest(spark, sf_dir):
     register_views(spark, sf_dir)
     # offline codebook training on the static corpus (c50's loop)
     emb = spark.table("embeddings")
-    q = quantize_vectors(emb, _sim.KM_SCALE).localCheckpoint()
-    cents, _ = _kmeans_loop(q, _sim.KM_K, _sim.KM_ITER)
-    cents = cents.localCheckpoint()
+    cents, _ = _kmeans_loop(emb, _sim.KM_K, _sim.KM_ITER, _sim.KM_SCALE)
 
     src = table_batched_source(sf_dir, "embeddings", "vec_id")
     stream = batched_parquet_stream(spark, src)
@@ -877,16 +875,9 @@ def s17_stream_ann_ingest(spark, sf_dir):
     index_dir = os.path.join(root, "index")
 
     def ingest(batch_df, epoch_id):
-        assigned = (
-            quantize_vectors(batch_df, _sim.KM_SCALE)
-            .crossJoin(F.broadcast(cents))
-            .withColumn("dist", _sq_dist(F.col("qv"), F.col("cv")))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("dist", "cell"))["cell"]
-                .cast("int")
-                .alias("cell")
-            )
+        q = quantize_vectors(batch_df, _sim.KM_SCALE)
+        assigned = _nearest(q, cents, ["vec_id"], "qv", "cell").select(
+            "vec_id", F.col("cell").cast("int").alias("cell")
         )
         # per-epoch overwrite: a replayed batch rewrites its own slice
         # of the index instead of appending duplicate (vec_id, cell)

@@ -6,6 +6,7 @@ on arbitrary record streams — duplicates, interleavings, redelivery.
 
 from __future__ import annotations
 
+import pytest
 from tests.conftest import SF_ORACLE, SF_SMALL
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -1449,24 +1450,179 @@ def test_c52_int8_topk_zero_norm_vector_sorts_last(spark):
     assert 2 not in ids, ids  # degenerate row never wins the top-k
 
 
-def test_srp_rejects_nondivisible_bands(spark):
-    """The SRP family must refuse n_planes % n_bands != 0 the way
-    lsh_candidate_pairs does -- trailing signature bits computed but
-    never banded silently lower recall."""
-    import pytest as _pytest
-
-    from dgraph_etl_spark.functions.similarity import (
-        srp_bands_fixedpoint,
-        srp_neardup_pairs,
-    )
+@pytest.mark.parametrize(
+    "lane",
+    ["srp_neardup_pairs", "srp_bands_fixedpoint", "pq_topk", "ivfpq_topk"],
+)
+def test_rejects_nondivisible_split(spark, lane):
+    """Every lane that splits a vector or signature into equal parts
+    must refuse a split that does not divide it, the way
+    lsh_candidate_pairs and build_ivfpq_index do: SRP's trailing
+    signature bits would be computed but never banded, and PQ's
+    trailing components silently dropped, lowering recall."""
+    from dgraph_etl_spark.functions import similarity as S
 
     emb = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
+        [(0, [1.0, 0.0, 0.5, 0.25])], "vec_id bigint, embedding array<double>"
     )
-    with _pytest.raises(ValueError, match="not divisible"):
-        srp_neardup_pairs(emb, n_planes=16, n_bands=3)
-    with _pytest.raises(ValueError, match="not divisible"):
-        srp_bands_fixedpoint(emb, n_planes=32, n_bands=5)
+    query = spark.createDataFrame([([1.0, 0.0, 0.5, 0.25],)], "qvec array<double>")
+    call = {
+        "srp_neardup_pairs": lambda: S.srp_neardup_pairs(
+            emb, n_planes=16, n_bands=3
+        ),
+        "srp_bands_fixedpoint": lambda: S.srp_bands_fixedpoint(
+            emb, n_planes=32, n_bands=5
+        ),
+        "pq_topk": lambda: S.pq_topk(emb, query, m_sub=3),
+        "ivfpq_topk": lambda: S.ivfpq_topk(emb, query, m_sub=3),
+    }[lane]
+    with pytest.raises(ValueError, match="not divisible"):
+        call()
+
+
+def _lloyd_ref(points, cents):
+    """One integer Lloyd round in plain Python over ``points`` {id: vec}
+    and ``cents`` {code: vec}: nearest code by exact squared distance
+    (ties to the smaller code), round-half-up means floor((2s+n)/(2n))
+    (Python's // floors), and a code with no members keeps its
+    centroid. Returns (assignment, new codebook)."""
+
+    def dist(v, c):
+        return sum((a - b) ** 2 for a, b in zip(v, cents[c]))
+
+    assign = {i: min(cents, key=lambda c: (dist(v, c), c)) for i, v in points.items()}
+    new = dict(cents)
+    for c in cents:
+        members = [points[i] for i in points if assign[i] == c]
+        n = len(members)
+        if n:
+            new[c] = [(2 * sum(col) + n) // (2 * n) for col in zip(*members)]
+    return assign, new
+
+
+def test_lloyd_core_equals_integer_reference(spark):
+    """The shared ANN core (_nearest + _lloyd_step) against a plain
+    Python integer Lloyd loop, for both codebook layouts its callers
+    use: a flat ``cell``-style codebook (IVF cells, s17) and a PQ-style
+    codebook keyed ``(m, code)`` joined on ``m``. The points put one
+    vector equidistant from two codes, give negative-sum means with a
+    fractional part, leave one code empty, and place a subspace-0
+    vector next to a subspace-1 code, so a mixed-up subspace join
+    would reassign it."""
+    from dgraph_etl_spark.functions.similarity import _lloyd_step, _nearest
+
+    flat_pts = {
+        1: [5, 0],  # equidistant from codes 1 and 3
+        2: [-3, -4],
+        3: [-4, -1],
+        4: [9, 1],
+        5: [12, -1],
+        6: [-21, -20],
+        7: [-20, -21],
+    }
+    flat_cb = {3: [10, 0], 1: [0, 0], 5: [-20, -20], 7: [100, 100]}
+    assign, new = _lloyd_ref(flat_pts, flat_cb)
+    assert assign[1] == 1
+    assert new[1] == [-1, -2]  # sums (-2, -5) over 3: -0.67, -1.67
+    assert new[3] == [11, 0]  # 10.5 rounds up
+    assert new[5] == [-20, -20]  # -20.5 rounds up
+    assert new[7] == [100, 100]  # no members
+    pq_pts = {
+        0: {1: [1, 1], 2: [-1, 0], 3: [60, 40], 4: [-40, -61]},
+        1: {1: [0, 0], 2: [2, 3], 3: [990, 1001], 4: [1, -1]},
+    }
+    pq_cb = {0: {0: [50, 50], 1: [-50, -50]}, 1: {0: [0, 1], 1: [1000, 1000]}}
+    assert _lloyd_ref(pq_pts[0], pq_cb[0])[0][2] == 1  # m=1's code 0 is nearer
+
+    layouts = [({None: flat_pts}, {None: flat_cb}, []), (pq_pts, pq_cb, ["m"])]
+    for pts, cb, on in layouts:
+        m_col = ["m int"] if on else []
+        key = (lambda m: [m]) if on else (lambda m: [])
+        rel = spark.createDataFrame(
+            [(i, *key(m), v) for m, ps in pts.items() for i, v in ps.items()],
+            ", ".join(["vec_id bigint", *m_col, "qv array<bigint>"]),
+        )
+        cents = spark.createDataFrame(
+            [(*key(m), c, v) for m, cs in cb.items() for c, v in cs.items()],
+            ", ".join([*m_col, "code bigint", "cv array<bigint>"]),
+        )
+        for _ in range(2):
+            want = {m: _lloyd_ref(pts[m], cb[m]) for m in pts}
+            got = _nearest(rel, cents, ["vec_id"], "qv", "code", on).collect()
+            assert {(r["m"] if on else None, r.vec_id): r.code for r in got} == {
+                (m, i): c for m, (a, _) in want.items() for i, c in a.items()
+            }, on
+            cents = _lloyd_step(rel, cents, ["vec_id"], "qv", "code", on)
+            assert {
+                (r["m"] if on else None, r.code): list(r.cv) for r in cents.collect()
+            } == {(m, c): v for m, (_, n) in want.items() for c, v in n.items()}, on
+            cb = {m: n for m, (_, n) in want.items()}
+
+
+# The one home of each ANN step (functions/similarity.py): a code
+# pattern -> the only function allowed to contain it. String literals
+# (the DuckDB oracle SQL) and comments are not code; a helper's own def
+# line does not count. c53's min(struct("dist", "a_id", ...)) is a
+# different reduction and is not scanned for.
+ANN_STEP_HOMES = {
+    "F.round(x * ": "fixed_point",
+    "F.floor((2.0 * ": "_int_mean",
+    "_int_mean(": "int_centroids",
+    "_sq_dist(": "_nearest",
+    ".limit(nprobe)": "_top_cells",
+    "argsort(-sims)": "_top_cells_np",
+    "- 2.0 * (": "_nearest_np",
+    "254.0 *": "_int8_grid",
+}
+
+
+def _code_lines(src):
+    """``src``'s lines with string literals and comments blanked."""
+    import io
+    import tokenize
+
+    rows = [list(line) for line in src.splitlines()]
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type in (tokenize.STRING, tokenize.COMMENT):
+            (r0, c0), (r1, c1) = tok.start, tok.end
+            for r in range(r0, r1 + 1):
+                row = rows[r - 1]
+                lo, hi = (c0 if r == r0 else 0), (c1 if r == r1 else len(row))
+                row[lo:hi] = " " * (hi - lo)
+    return ["".join(row) for row in rows]
+
+
+def test_ann_steps_live_in_one_helper():
+    """Each integer-exact ANN step has one copy, its helper in
+    functions/similarity.py: a second inline copy (the s17 and c59
+    suite queries used to carry their own) is how the lanes drift."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "dgraph_etl_spark"
+    offenders, homed = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        spans = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for no, line in enumerate(_code_lines(src), 1):
+            if line.lstrip().startswith("def "):
+                continue
+            inner = [s for s in spans if s[0] <= no <= s[1]]
+            owner = min(inner, key=lambda s: s[1] - s[0])[2] if inner else None
+            for pat, home in ANN_STEP_HOMES.items():
+                if pat not in line:
+                    continue
+                if owner == home:
+                    homed.add(pat)
+                else:
+                    rel = path.relative_to(pkg).as_posix()
+                    offenders.append(f"{rel}:{no} {pat!r} outside {home}")
+    assert offenders == [], offenders
+    assert homed == set(ANN_STEP_HOMES), set(ANN_STEP_HOMES) - homed
 
 
 def test_g04_hop_counts_rejects_k0(spark):

@@ -1,5 +1,5 @@
 """The scratch-artifact protocol (dgraph_etl_spark/staging.py): failure
-cleanup through an index builder, the bucketed-table root's removal at
+cleanup through an index builder, the per-process roots' removal at
 exit, and a structure guard that keeps the protocol in one module."""
 
 from __future__ import annotations
@@ -46,9 +46,10 @@ def test_build_ivf_index_failed_write_leaves_no_tmp(spark, tmp_path):
 
 
 def test_bucketed_root_removed_at_exit(tmp_path):
-    """A process's bucketed-table scratch root holds files only its own
-    (in-memory) catalog can name: it must be gone once the process
-    exits."""
+    """A process's per-process scratch roots must be gone once the
+    process exits: the bucketed-table root (files only its own
+    in-memory catalog can name) and each streaming query's state root
+    (keyed by pid, so no later process ever reuses it)."""
     code = textwrap.dedent(
         """
         import os
@@ -57,6 +58,7 @@ def test_bucketed_root_removed_at_exit(tmp_path):
         sys.path.insert(0, sys.argv[1])
         from dgraph_etl_spark.session import get_spark
         from dgraph_etl_spark.sources.bucketed import bucketed_table
+        from dgraph_etl_spark.streaming.core import scratch_state_root
 
         spark = get_spark(cpus=1, shuffle_partitions=1)
         bucketed_table(spark, spark.range(10), "bkt_exit_probe", "id", 2)
@@ -65,6 +67,9 @@ def test_bucketed_root_removed_at_exit(tmp_path):
             f"dgraph_etl_bucketed_{os.getpid()}_{id(spark)}",
         )
         assert os.listdir(root) == ["bkt_exit_probe"], os.listdir(root)
+        state = scratch_state_root("exit_probe")
+        open(os.path.join(state, "epoch0"), "w").close()
+        print(state)
         print(root)
         """
     )
@@ -79,9 +84,9 @@ def test_bucketed_root_removed_at_exit(tmp_path):
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    root = out.stdout.strip().splitlines()[-1]
-    assert root.startswith(str(scratch))
-    assert not os.path.exists(root), os.listdir(root)
+    for root in out.stdout.strip().splitlines()[-2:]:
+        assert root.startswith(str(scratch))
+        assert not os.path.exists(root), os.listdir(root)
 
 
 # Modules and functions that keep their own tmp/rename or mtime key,

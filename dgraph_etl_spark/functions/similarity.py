@@ -39,6 +39,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import session_stopped
 from ..staging import is_published, publish
 
 
@@ -1712,11 +1713,6 @@ _OPEN_INDEXES: dict[tuple[int, str], "DataFrame"] = {}
 _PERSISTED_CENTROIDS: dict[tuple[int, str, str], "DataFrame"] = {}
 
 
-def _session_stopped(df) -> bool:
-    sc = getattr(df.sparkSession, "_sc", None)
-    return sc is None or getattr(sc, "_jsc", None) is None
-
-
 def _evict_centroid(key) -> None:
     """Drop a cached centroid entry AND release its storage: the
     DataFrames in _PERSISTED_CENTROIDS are .cache()'d, so deleting the
@@ -1724,7 +1720,7 @@ def _evict_centroid(key) -> None:
     for the life of the session (one leak per rebuild). unpersist is
     guarded -- a stopped session has no context to unpersist against."""
     df = _PERSISTED_CENTROIDS.pop(key, None)
-    if df is not None and not _session_stopped(df):
+    if df is not None and not session_stopped(df):
         try:
             df.unpersist(blocking=False)
         except Exception:
@@ -1746,10 +1742,10 @@ def _forget_rebuilt_indexes() -> None:
 
 
 def open_ivf_kmeans_index(spark, path: str):
-    for k in [k for k, v in _OPEN_INDEXES.items() if _session_stopped(v)]:
+    for k in [k for k, v in _OPEN_INDEXES.items() if session_stopped(v)]:
         del _OPEN_INDEXES[k]
     for k in [
-        k for k, v in _PERSISTED_CENTROIDS.items() if _session_stopped(v)
+        k for k, v in _PERSISTED_CENTROIDS.items() if session_stopped(v)
     ]:
         _evict_centroid(k)
     key = (id(spark), os.path.abspath(path))

@@ -142,10 +142,11 @@ Semantics (Dgraph's, for this subset):
 - ``var`` blocks bind only; NAMED blocks are outputs.
 
 Execution: uid sets are DataFrames with one ``id`` column; an edge
-step is a broadcast-frontier join against the bound predicate's edge
-table (the k_hop scale shape: the 100 TB edge table never moves, the
-frontier does); NOT is a left-anti join, AND a left-semi fold, OR a
-union-dedup of branch survivors; ``first: N`` plans as the
+step calls graph/traverse.neighbors (and @recurse calls expand), the
+broadcast-frontier join against the bound predicate's edge table that
+k_hop uses (the 100 TB edge table never moves, the frontier does);
+NOT is a left-anti join, AND a left-semi fold, OR a union-dedup of
+branch survivors; ``first: N`` plans as the
 TakeOrderedAndProject top-k (the b24 shape -- never a global sort),
 with the page's row_number computed on the <= offset+first surviving
 rows. The relational reading is documented at graph/traverse.py:1.
@@ -162,6 +163,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .traverse import expand, neighbors, out_pairs
 
 # filter/root terms: tagged tuples
 #   ("uid", var) ("eq", attr, val) ("has", pred) ("cmp", op, attr, val)
@@ -1335,10 +1338,10 @@ def run_dql(text: str, graph: DqlGraph) -> list[DqlResult]:
 
     Scale shape: each edge step broadcasts the frontier against the
     predicate's edge table (never moves the edges), exclusions are
-    anti-joins, every bound set is dropDuplicates'd -- identical to
-    graph/traverse.expand, which executes the same reference query as
-    hand-built DataFrames (g01-g05). Pagination is top-k
-    (TakeOrderedAndProject), never a global sort."""
+    anti-joins, every bound set is dropDuplicates'd. The hop itself is
+    graph/traverse.neighbors / expand, the same calls k_hop makes for
+    the hand-built DataFrame form of the reference query (g01-g05).
+    Pagination is top-k (TakeOrderedAndProject), never a global sort."""
     env: dict[str, DataFrame] = {}
     out: list[DqlResult] = []
     n_steps = 0
@@ -1361,8 +1364,7 @@ def run_dql(text: str, graph: DqlGraph) -> list[DqlResult]:
             continue
         leaf_list = block.leaf_attrs
         if block.recurse is not None:
-            n_steps += 1
-            root, leaf_list = _recurse_reach(root, block, graph, n_steps)
+            root, leaf_list = _recurse_reach(root, block, graph)
         if block.cascade:
             # @cascade: keep only uids carrying EVERY listed leaf
             # predicate. Runs AFTER pagination, as Dgraph documents
@@ -1425,12 +1427,6 @@ def run_dql(text: str, graph: DqlGraph) -> list[DqlResult]:
                     f"unbound edge predicate {step.pred!r} "
                     f"(bound: {sorted(graph.edge_preds)})"
                 )
-            # per-step alias: consecutive hops join the SAME edge
-            # DataFrame, and the second hop's frontier already derives
-            # from it -- unqualified edges['dst'] would be an
-            # ambiguous self-join reference
-            n_steps += 1
-            ea = f"_dql_e{n_steps}"
             eframe = edges
             if step.facets is not None:
                 # @facets(...) prunes EDGES (not reached nodes): a
@@ -1438,21 +1434,7 @@ def run_dql(text: str, graph: DqlGraph) -> list[DqlResult]:
                 eframe = eframe.filter(
                     _facet_predicate(step.facets, eframe, step.pred)
                 )
-            # project to the documented (src, dst) contract before
-            # aliasing: facet columns served the filter above, and a
-            # binding carrying extra columns (e.g. its own 'id') would
-            # make the unqualified join key ambiguous and drag dead
-            # columns through the broadcast
-            e = eframe.select("src", "dst").alias(ea)
-            reached = (
-                F.broadcast(root.select("id"))
-                .join(e, F.col("id") == F.col(f"{ea}.src"))
-                # NULL dst must not enter a uid set (traverse.expand's
-                # phantom-node note)
-                .filter(F.col(f"{ea}.dst").isNotNull())
-                .select(F.col(f"{ea}.dst").alias("id"))
-                .dropDuplicates(["id"])
-            )
+            reached = neighbors(root, eframe)
             if step.filt is not None:
                 reached = _apply_filter(reached, step.filt, env, graph)
             if step.alias:
@@ -1675,16 +1657,11 @@ def _norm_level(
                 f"unbound edge predicate {pred!r} under @normalize "
                 f"(bound: {sorted(graph.edge_preds)})"
             )
-        ea = "_dqln" + "_".join(path) + f"_{idx}"
-        dst_col = f"{ea}_dst"
-        e = edges.select("src", "dst").alias(ea)
+        dst_col = "_dqln" + "_".join(path) + f"_{idx}_dst"
+        # ``out`` has one row per path: hop from the distinct parents
         pairs = (
-            F.broadcast(out.select("id").dropDuplicates(["id"]))
-            .join(e, F.col("id") == F.col(f"{ea}.src"))
-            # NULL dst must not become a phantom child row
-            # (traverse.expand's phantom-node note)
-            .filter(F.col(f"{ea}.dst").isNotNull())
-            .select("id", F.col(f"{ea}.dst").alias(dst_col))
+            out_pairs(out.select("id").dropDuplicates(["id"]), edges)
+            .withColumnRenamed("dst", dst_col)
             .localCheckpoint(eager=False)
         )
         child_flat = _norm_level(
@@ -1712,15 +1689,17 @@ def _norm_level(
 
 
 def _recurse_reach(
-    root: DataFrame, block: Block, graph: DqlGraph, tag: int
+    root: DataFrame, block: Block, graph: DqlGraph
 ) -> tuple[DataFrame, list[str]]:
     """@recurse execution: visited-pruned BFS over the union of the
     block's listed edge predicates, depth-1 expansions from the root
     set. Returns (reach set incl. root, remaining leaf projections).
 
-    Scale shape: per level, broadcast the frontier against the (never
-    moved) edge table and anti-join the visited set -- the k_hop
-    discipline, with per-level localCheckpoints truncating lineage.
+    Scale shape: per level, traverse.expand (the broadcast-frontier hop
+    k_hop takes, then the anti-join against visited), with per-level
+    localCheckpoints truncating lineage. The loop stays its own: k_hop
+    keeps lazy visited unions and cached frontiers for cross-call cache
+    hits, this one the checkpointed visited set below.
     Each level's frontier is materialized once for the empty-frontier
     early exit; visited grows by disjoint union (the anti-join
     guarantees disjointness, so no dedup shuffle) and is re-
@@ -1749,18 +1728,8 @@ def _recurse_reach(
         root.select("id").dropDuplicates(["id"]).localCheckpoint(eager=False)
     )
     frontier = visited
-    for lvl in range(depth - 1):
-        ea = f"_dqlr{tag}_{lvl}"
-        e = edges.alias(ea)
-        reached = (
-            F.broadcast(frontier.select("id"))
-            .join(e, F.col("id") == F.col(f"{ea}.src"))
-            .filter(F.col(f"{ea}.dst").isNotNull())
-            .select(F.col(f"{ea}.dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(visited, "id", "left_anti")
-        )
-        frontier = reached.localCheckpoint(eager=False)
+    for _ in range(depth - 1):
+        frontier = expand(frontier, edges, visited).localCheckpoint(eager=False)
         if frontier.isEmpty():
             break
         visited = visited.unionByName(frontier).localCheckpoint(eager=False)
@@ -2022,8 +1991,8 @@ def _degree_frame(
     pred: str, root: DataFrame, graph: DqlGraph, out_col: str
 ) -> DataFrame:
     """Per-root-uid distinct out-degree through ``pred``, 0 kept
-    (Dgraph's count-over-uid-list). The edge table is semi-joined
-    against the broadcast root BEFORE aggregating -- a full-table
+    (Dgraph's count-over-uid-list). The broadcast root hops the edge
+    table (traverse.out_pairs) BEFORE aggregating -- a full-table
     groupBy would shuffle every (src, dst) pair to count a handful of
     root uids (the 'edges never move' discipline)."""
     edges = graph.edge_preds.get(pred)
@@ -2033,14 +2002,8 @@ def _degree_frame(
             f"(bound: {sorted(graph.edge_preds)})"
         )
     cnt = (
-        edges.select("src", "dst")
-        .filter(F.col("dst").isNotNull())
-        .join(
-            F.broadcast(root.select(F.col("id").alias("src"))),
-            "src",
-            "left_semi",
-        )
-        .groupBy(F.col("src").alias("id"))
+        out_pairs(root, edges)
+        .groupBy("id")
         .agg(F.countDistinct("dst").alias(out_col))
     )
     return (
@@ -2081,7 +2044,7 @@ def _has_set(pred: str, graph: DqlGraph) -> DataFrame:
     parts = []
     e = graph.edge_preds.get(pred)
     if e is not None:
-        # NULL src must not become a phantom uid (traverse.expand's
+        # NULL src must not become a phantom uid (traverse.out_pairs'
         # phantom-node note)
         parts.append(
             e.filter(F.col("dst").isNotNull() & F.col("src").isNotNull())

@@ -13,15 +13,22 @@ Re-expressed relationally: each hop is frontier JOIN edges, each
 @filter(NOT uid(set)) is a left-anti join against the accumulated
 visited set, and var blocks (G5) are intermediate DataFrames.
 
+The hop itself lives once, in :func:`out_pairs`; :func:`neighbors`
+and :func:`expand` build the set forms on it, and every traversal --
+k_hop, the DQL uid steps, @recurse, @normalize and count(pred) in
+graph/dql.py, g21's path count -- calls these instead of joining the
+edge table by hand.
+
 Scale notes (power-law graphs, 100 TB):
 - the frontier is usually tiny vs. the edge table -> broadcast it
   (frontier side) so each hop is a broadcast hash join with NO shuffle
-  of the edges; only fall back to shuffle joins when the frontier
-  explodes (AQE decides via runtime stats when we don't hint).
+  of the edges. The hint is forced; the seeded frontiers stay under
+  tests/test_fixture_contract.py::test_seed_frontier_bound's ceiling.
+  A frontier above it is ROADMAP item 1's next step.
 - per-hop .distinct() keeps the frontier a set (otherwise hub fan-in
   multiplies rows hop over hop).
-- lineage grows per hop; for large k, localCheckpoint every few hops
-  truncates the plan (checkpoint_every).
+- lineage grows per hop; k_hop localCheckpoints every third frontier
+  to truncate the plan.
 - visited set is maintained as a growing DataFrame; anti-joins against
   it implement the @filter(NOT uid(...)) exclusions exactly.
 """
@@ -45,33 +52,40 @@ def team_seed(team_member: DataFrame, team_id: str) -> DataFrame:
     )
 
 
-def expand(
-    frontier: DataFrame,
-    edges: DataFrame,
-    visited: DataFrame,
-    broadcast_frontier: bool = True,
-) -> DataFrame:
-    """G2/G3: one hop -- follow edges out of the frontier, excluding
-    anything already visited. frontier/visited have column `id`.
+def out_pairs(frontier: DataFrame, edges: DataFrame) -> DataFrame:
+    """The frontier hop: one (id, dst) row per edge leaving the
+    frontier's ``id`` column. The frontier is the broadcast side, so the
+    edge table never moves.
 
-    ``broadcast_frontier=True`` is right for the reference-parity
-    seeded traversals (a team's 2-hop frontier is bounded by team size
-    x degree). It is a FORCED hint AQE cannot undo: for unbounded
-    exploration on a power-law graph -- where a hop-2/3 frontier can
-    reach a large fraction of all nodes -- pass False and let AQE pick
-    the join side from runtime stats."""
-    f = F.broadcast(frontier) if broadcast_frontier else frontier
-    reached = (
-        f.join(edges, f["id"] == edges["src"], "inner")
-        # NULL dst must not become a frontier member: the reference's
-        # NOT-uid / SQL NOT IN exclusion drops NULLs, while a
-        # left_anti on id would KEEP a NULL id forever (never matches
-        # visited) -- a phantom node in every hop count
+    Rows are not deduplicated: a frontier that repeats an id (a multiset
+    of path ends, g21) gives one row per path. NULL dst is dropped: the
+    reference's NOT-uid / SQL NOT IN exclusion drops NULLs, while a
+    left_anti on id would keep a NULL id forever (it never matches
+    visited) -- a phantom node in every hop count. The edge source is
+    renamed to ``id`` and joined USING it, so consecutive hops over one
+    edge DataFrame need no per-hop alias to stay unambiguous."""
+    return (
+        F.broadcast(frontier.select("id"))
+        .join(edges.select(F.col("src").alias("id"), "dst"), "id")
         .filter(F.col("dst").isNotNull())
+    )
+
+
+def neighbors(frontier: DataFrame, edges: DataFrame) -> DataFrame:
+    """The distinct ``id`` set one hop out of the frontier."""
+    return (
+        out_pairs(frontier, edges)
         .select(F.col("dst").alias("id"))
         .dropDuplicates(["id"])
     )
-    return reached.join(visited, "id", "left_anti")
+
+
+def expand(
+    frontier: DataFrame, edges: DataFrame, visited: DataFrame
+) -> DataFrame:
+    """G2/G3: one hop -- follow edges out of the frontier, excluding
+    anything already visited. frontier/visited have column `id`."""
+    return neighbors(frontier, edges).join(visited, "id", "left_anti")
 
 
 # Frontier caches from recent k_hop calls, evicted generationally: a
@@ -86,22 +100,27 @@ _KEEP_GENERATIONS = 3
 _CACHE_GENERATIONS: list[list[DataFrame]] = []
 
 
-def k_hop(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    checkpoint_every: int = 3,
-    broadcast_frontier: bool = True,
-) -> list[DataFrame]:
-    """G2/G3 generalized: k-hop BFS. Returns [hop1, hop2, ... hopk]
-    frontier DataFrames (each exclusive of all earlier hops and the
-    seeds, matching the reference's NOT uid(...) filters)."""
-    while len(_CACHE_GENERATIONS) >= _KEEP_GENERATIONS:
+def evict_frontier_caches(keep: int = 0) -> None:
+    """Unpersist k_hop's cached frontiers, oldest generation first,
+    until at most ``keep`` generations remain. With ``keep=0`` the next
+    traversal plans against no earlier call's frontiers: a frontier an
+    earlier call cached (and perhaps already materialized) replaces the
+    matching subtree, so the same query's plan otherwise depends on
+    what ran before it (tools/plan_audit.py and the plan-lock test
+    plan each query from this clean state)."""
+    while len(_CACHE_GENERATIONS) > keep:
         for df in _CACHE_GENERATIONS.pop(0):
             try:
                 df.unpersist(blocking=False)
             except Exception:
                 pass  # session died between queries; nothing to free
+
+
+def k_hop(edges: DataFrame, seeds: DataFrame, k: int) -> list[DataFrame]:
+    """G2/G3 generalized: k-hop BFS. Returns [hop1, hop2, ... hopk]
+    frontier DataFrames (each exclusive of all earlier hops and the
+    seeds, matching the reference's NOT uid(...) filters)."""
+    evict_frontier_caches(keep=_KEEP_GENERATIONS - 1)
     generation: list[DataFrame] = []
     _CACHE_GENERATIONS.append(generation)
     # every hop joins against edges: materialize it once instead of
@@ -124,11 +143,12 @@ def k_hop(
     frontier = visited
     hops: list[DataFrame] = []
     for i in range(k):
-        frontier = expand(frontier, edges, visited, broadcast_frontier)
-        if (i + 1) % checkpoint_every == 0:
-            # a localCheckpoint already stores the RDD blocks; adding
-            # .cache() on top would hold a SECOND copy of the same
-            # frontier for up to _KEEP_GENERATIONS generations
+        frontier = expand(frontier, edges, visited)
+        if (i + 1) % 3 == 0:
+            # every third hop cuts the lineage. A localCheckpoint
+            # already stores the RDD blocks; adding .cache() on top
+            # would hold a SECOND copy of the same frontier for up to
+            # _KEEP_GENERATIONS generations
             frontier = frontier.localCheckpoint(eager=False)
         else:
             frontier = frontier.cache()  # next hop's join + anti-join
@@ -180,6 +200,9 @@ def relaxation_rounds(
     hash agg, first hop broadcast-seeded, lineage cut per round."""
     if rounds < 1:
         raise ValueError(f"relaxation_rounds: rounds must be >= 1, got {rounds}")
+    # a NULL dst would survive the final left_anti as a phantom NULL
+    # vertex (out_pairs' note); the oracles' NOT IN drops it
+    edges = edges.filter(F.col("dst").isNotNull())
     best = (
         F.broadcast(seeds)
         .join(edges, F.col("id") == edges["src"])

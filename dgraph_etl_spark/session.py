@@ -294,6 +294,14 @@ def iterative_loop_side(df, *keys: str, small_side_rows: int, pin_at_rows: int |
     return pinned_partition_cache(df, *keys)
 
 
+def session_stopped(df) -> bool:
+    """True once the SparkSession behind ``df`` has been stopped: the
+    lazy-eviction test for module caches of DataFrames (graph edges,
+    open ANN indexes), which would otherwise pin dead sessions."""
+    sc = getattr(df.sparkSession, "_sc", None)
+    return sc is None or getattr(sc, "_jsc", None) is None
+
+
 class SessionKeyedMap:
     """Registry keyed by a LIVE SparkSession (plus an optional subkey),
     carrying the three safety properties every per-session cache in

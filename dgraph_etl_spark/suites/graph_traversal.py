@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import register_views
 from ..graph import traverse as G
 from ..registry import register
+from ..session import session_stopped
 from ..views import oracle_with_views as V
 
 TEAM = "7"
@@ -53,11 +54,6 @@ hop2 AS (
 _EDGE_CACHE: dict = {}
 
 
-def _session_stopped(df) -> bool:
-    sc = getattr(df.sparkSession, "_sc", None)
-    return sc is None or getattr(sc, "_jsc", None) is None
-
-
 def _cached_edges(spark, sf_dir):
     import os
 
@@ -69,7 +65,7 @@ def _cached_edges(spark, sf_dir):
     # the sweep a soak that cycles sessions accumulates dead entries
     # (and their pinned JVM sessions) forever. pop, not del: two
     # concurrent graph queries may both compute this sweep list
-    for k in [k for k, v in list(_EDGE_CACHE.items()) if _session_stopped(v)]:
+    for k in [k for k, v in list(_EDGE_CACHE.items()) if session_stopped(v)]:
         _EDGE_CACHE.pop(k, None)
     # the key carries the SOURCE content version (staging's source
     # key): a fixture regenerated in place mid-session must rebuild,
@@ -1582,19 +1578,13 @@ def g21_path_multiplicity(spark, sf_dir):
     edges, team_member, _ = _graph_inputs(spark, sf_dir)
     seeds = G.team_seed(team_member, TEAM)
     hop2 = G.k_hop(edges, seeds, k=2)[1]
-    e1, e2 = edges.alias("e1"), edges.alias("e2")
-    paths = (
-        F.broadcast(
-            F.broadcast(seeds).join(e1, F.col("id") == F.col("e1.src"))
-        )
-        .join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            hop2.select(F.col("id").alias("h2")),
-            F.col("e2.dst") == F.col("h2"),
-            "left_semi",
-        )
+    # the mid frontier is a multiset (one row per seed->mid edge), so
+    # the second hop yields one row per path
+    mids = G.out_pairs(seeds, edges).select(F.col("dst").alias("id"))
+    paths = G.out_pairs(mids, edges).join(
+        hop2.select(F.col("id").alias("dst")), "dst", "left_semi"
     )
-    return paths.groupBy(F.col("e2.dst").alias("id")).agg(
+    return paths.groupBy(F.col("dst").alias("id")).agg(
         F.count(F.lit(1)).alias("n_paths")
     )
 

@@ -1576,14 +1576,28 @@ ANN_STEP_HOMES = {
 }
 
 
-def _code_lines(src):
-    """``src``'s lines with string literals and comments blanked."""
+# The one home of the frontier hop (graph/traverse.py). These patterns
+# sit inside string literals, so they are matched on lines with only
+# the comments blanked. No home means nowhere: a join on an
+# alias-qualified edge source (F.col("e1.src")) is a hand-made hop. The
+# NULL-dst filter lives in out_pairs, plus relaxation_rounds' edge
+# input (its score-carrying rounds do not go through out_pairs).
+FRONTIER_HOP_HOMES = {
+    '.src")': (),
+    '.filter(F.col("dst").isNotNull())': ("out_pairs", "relaxation_rounds"),
+}
+
+
+def _code_lines(src, keep_strings=False):
+    """``src``'s lines with comments (and string literals unless
+    ``keep_strings``) blanked."""
     import io
     import tokenize
 
+    blank = {tokenize.COMMENT} | (set() if keep_strings else {tokenize.STRING})
     rows = [list(line) for line in src.splitlines()]
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
-        if tok.type in (tokenize.STRING, tokenize.COMMENT):
+        if tok.type in blank:
             (r0, c0), (r1, c1) = tok.start, tok.end
             for r in range(r0, r1 + 1):
                 row = rows[r - 1]
@@ -1594,12 +1608,18 @@ def _code_lines(src):
 
 def test_ann_steps_live_in_one_helper():
     """Each integer-exact ANN step has one copy, its helper in
-    functions/similarity.py: a second inline copy (the s17 and c59
-    suite queries used to carry their own) is how the lanes drift."""
+    functions/similarity.py, and the frontier hop has one, in
+    graph/traverse.out_pairs: a second inline copy (the s17 and c59
+    suite queries, the DQL uid steps and g21 used to carry their own)
+    is how the lanes drift."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "dgraph_etl_spark"
+    homes = [
+        (ANN_STEP_HOMES, False, {p: (h,) for p, h in ANN_STEP_HOMES.items()}),
+        (FRONTIER_HOP_HOMES, True, FRONTIER_HOP_HOMES),
+    ]
     offenders, homed = [], set()
     for path in sorted(pkg.rglob("*.py")):
         src = path.read_text()
@@ -1608,21 +1628,23 @@ def test_ann_steps_live_in_one_helper():
             for n in ast.walk(ast.parse(src))
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
         ]
-        for no, line in enumerate(_code_lines(src), 1):
-            if line.lstrip().startswith("def "):
-                continue
-            inner = [s for s in spans if s[0] <= no <= s[1]]
-            owner = min(inner, key=lambda s: s[1] - s[0])[2] if inner else None
-            for pat, home in ANN_STEP_HOMES.items():
-                if pat not in line:
+        for _, keep_strings, where in homes:
+            for no, line in enumerate(_code_lines(src, keep_strings), 1):
+                if line.lstrip().startswith("def "):
                     continue
-                if owner == home:
-                    homed.add(pat)
-                else:
-                    rel = path.relative_to(pkg).as_posix()
-                    offenders.append(f"{rel}:{no} {pat!r} outside {home}")
+                inner = [s for s in spans if s[0] <= no <= s[1]]
+                owner = min(inner, key=lambda s: s[1] - s[0])[2] if inner else None
+                for pat, home in where.items():
+                    if pat not in line:
+                        continue
+                    if owner in home:
+                        homed.add((pat, owner))
+                    else:
+                        rel = path.relative_to(pkg).as_posix()
+                        offenders.append(f"{rel}:{no} {pat!r} outside {home}")
     assert offenders == [], offenders
-    assert homed == set(ANN_STEP_HOMES), set(ANN_STEP_HOMES) - homed
+    want = {(p, h) for _, _, where in homes for p, hs in where.items() for h in hs}
+    assert homed == want, want - homed
 
 
 def test_g04_hop_counts_rejects_k0(spark):
@@ -1638,20 +1660,38 @@ def test_g04_hop_counts_rejects_k0(spark):
         hop_counts(edges, seeds, k=0)
 
 
-def test_khop_null_dst_never_enters_frontier(spark):
+@pytest.mark.parametrize("walk", ["k_hop", "widest", "cheapest"])
+def test_khop_null_dst_never_enters_frontier(spark, walk):
     """NULL dst must not become a phantom frontier node: the oracle's
     NOT IN exclusion drops NULLs, and a left_anti on id would keep a
-    NULL id in EVERY hop (it never matches the visited set)."""
-    from dgraph_etl_spark.graph.traverse import k_hop
+    NULL id in EVERY hop (it never matches the visited set). Holds for
+    k_hop and for both relaxation_rounds semirings (g24's max/least,
+    g27's min/+), whose final left_anti against the seeds would keep
+    it the same way."""
+    from pyspark.sql import functions as F
+
+    from dgraph_etl_spark.graph.traverse import k_hop, relaxation_rounds
 
     edges = spark.createDataFrame(
         [(1, 2), (2, None), (2, 3)], "src bigint, dst bigint"
     )
     seeds = spark.createDataFrame([(1,)], "id bigint")
-    hop1, hop2 = k_hop(edges, seeds, k=2)
-    assert [r.id for r in hop1.collect()] == [2]
-    assert [r.id for r in hop2.collect()] == [3], (
-        "hop2 must be {3}, with no NULL phantom"
+    if walk == "k_hop":
+        hop1, hop2 = k_hop(edges, seeds, k=2)
+        assert [r.id for r in hop1.collect()] == [2]
+        assert [r.id for r in hop2.collect()] == [3], (
+            "hop2 must be {3}, with no NULL phantom"
+        )
+        return
+    agg_fn, combine = {
+        "widest": (F.max, F.least),
+        "cheapest": (F.min, lambda v, s: v + s),
+    }[walk]
+    best = relaxation_rounds(
+        seeds, edges.withColumn("score", F.lit(1.0)), agg_fn, combine
+    )
+    assert sorted(r.nid for r in best.collect()) == [2, 3], (
+        "reached set must be {2, 3}, with no NULL phantom"
     )
 
 

@@ -24,6 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dgraph_etl_spark.graph.traverse import evict_frontier_caches  # noqa: E402
 from dgraph_etl_spark.registry import REGISTRY, _load_suites  # noqa: E402
 from dgraph_etl_spark.session import get_spark  # noqa: E402
 
@@ -94,6 +95,7 @@ def main() -> None:
         if name.startswith("s"):  # streaming: fn runs a real job
             skipped.append(name)
             continue
+        evict_frontier_caches()
         try:
             df = q.fn(spark, sf)
             plan = df._jdf.queryExecution().explainString(

@@ -1660,36 +1660,42 @@ def test_g04_hop_counts_rejects_k0(spark):
         hop_counts(edges, seeds, k=0)
 
 
-@pytest.mark.parametrize("walk", ["k_hop", "widest", "cheapest"])
-def test_khop_null_dst_never_enters_frontier(spark, walk):
+def test_khop_null_dst_never_enters_frontier(spark):
     """NULL dst must not become a phantom frontier node: the oracle's
     NOT IN exclusion drops NULLs, and a left_anti on id would keep a
-    NULL id in EVERY hop (it never matches the visited set). Holds for
-    k_hop and for both relaxation_rounds semirings (g24's max/least,
-    g27's min/+), whose final left_anti against the seeds would keep
-    it the same way."""
-    from pyspark.sql import functions as F
-
-    from dgraph_etl_spark.graph.traverse import k_hop, relaxation_rounds
+    NULL id in EVERY hop (it never matches the visited set)."""
+    from dgraph_etl_spark.graph.traverse import k_hop
 
     edges = spark.createDataFrame(
         [(1, 2), (2, None), (2, 3)], "src bigint, dst bigint"
     )
     seeds = spark.createDataFrame([(1,)], "id bigint")
-    if walk == "k_hop":
-        hop1, hop2 = k_hop(edges, seeds, k=2)
-        assert [r.id for r in hop1.collect()] == [2]
-        assert [r.id for r in hop2.collect()] == [3], (
-            "hop2 must be {3}, with no NULL phantom"
-        )
-        return
+    hop1, hop2 = k_hop(edges, seeds, k=2)
+    assert [r.id for r in hop1.collect()] == [2]
+    assert [r.id for r in hop2.collect()] == [3], (
+        "hop2 must be {3}, with no NULL phantom"
+    )
+
+
+@pytest.mark.parametrize("walk", ["widest", "cheapest"])
+def test_relaxation_null_dst_never_reached(spark, walk):
+    """The k_hop NULL-dst rule holds for both relaxation_rounds
+    semirings (g24's max/least, g27's min/+): their final left_anti
+    against the seeds would keep a NULL vertex the same way."""
+    from pyspark.sql import functions as F
+
+    from dgraph_etl_spark.graph.traverse import relaxation_rounds
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, None, 1.0), (2, 3, 1.0)],
+        "src bigint, dst bigint, score double",
+    )
+    seeds = spark.createDataFrame([(1,)], "id bigint")
     agg_fn, combine = {
         "widest": (F.max, F.least),
         "cheapest": (F.min, lambda v, s: v + s),
     }[walk]
-    best = relaxation_rounds(
-        seeds, edges.withColumn("score", F.lit(1.0)), agg_fn, combine
-    )
+    best = relaxation_rounds(seeds, edges, agg_fn, combine)
     assert sorted(r.nid for r in best.collect()) == [2, 3], (
         "reached set must be {2, 3}, with no NULL phantom"
     )

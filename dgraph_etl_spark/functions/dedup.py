@@ -92,17 +92,47 @@ def token_ngrams(col: Column | str = "text", n: int = 3) -> Column:
     SINGLETON through every dedup/containment/contamination lane --
     the family-wide contract exact_dedup/prefix_key_dedup already
     honor -- and the DuckDB oracles agree (array_to_string(NULL) is
-    NULL there, which never equi-joins)."""
+    NULL there, which never equi-joins).
+
+    Linear in the token count: gram i is row i of ``n`` shifted
+    slices zipped together, ``arrays_zip(slice(t, 1, w), ...,
+    slice(t, n, w))`` with ``w = greatest(size(t) - (n - 1), 1)``, so
+    the ``transform`` lambda only joins struct fields. A lambda that
+    slices ``t`` itself inlines ``split(text)`` into its body and
+    re-splits the whole text at every position (O(tokens^2) per doc;
+    the hazard rolled_ngram_hashes' docstring names). A doc shorter
+    than ``n`` tokens still gives its one shorter gram: arrays_zip
+    pads the empty tail slices with NULLs, which concat_ws skips."""
     t = tokens(col)
-    cnt = F.size(t) - (n - 1)
+    w = F.greatest(F.size(t) - (n - 1), F.lit(1))
+    z = F.arrays_zip(*[F.slice(t, i, w) for i in range(1, n + 1)])
     return F.when(
         t.isNotNull(),
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+                z, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)])
             )
         ),
+    )
+
+
+def gram_rows(docs: DataFrame, n: int, *cols: Column | str) -> DataFrame:
+    """``(*cols, sz, g)``: one row per distinct n-gram ``g`` of each
+    doc's text, ``sz`` being the doc's distinct-gram count -- the
+    ``set_overlap`` input shape. NULL text gives no rows.
+
+    ``explode_outer`` plus a NULL filter, not ``explode``: for a plain
+    explode Spark infers a ``size(gs) > 0`` filter and pushes it below
+    the projection that names ``gs``, inlining the gram expression so
+    every row builds its grams twice."""
+    base = docs.select(*cols, token_ngrams(n=n).alias("gs"))
+    return (
+        base.select(
+            *base.columns[:-1],
+            F.size("gs").alias("sz"),
+            F.explode_outer("gs").alias("g"),
+        )
+        .filter(F.col("g").isNotNull())
     )
 
 
@@ -377,16 +407,8 @@ def ngram_jaccard_pairs(
     reproduces it in SQL): a set_overlap self-join of each doc's
     distinct shingles, blocked on ``block_col``. The exploded shingle
     stream feeds both join sides, so it is materialized once."""
-    base = docs.select(
-        F.col("doc_id").alias("id"),
-        F.col(block_col).alias("blk"),
-        token_ngrams(n=n).alias("gs"),
-    )
-    sh = base.select(
-        "id",
-        "blk",
-        F.size("gs").alias("sz"),
-        F.explode("gs").alias("g"),
+    sh = gram_rows(
+        docs, n, F.col("doc_id").alias("id"), F.col(block_col).alias("blk")
     ).localCheckpoint()
     return (
         set_overlap(sh, sh, ["blk", "g"], operator.lt)
@@ -411,33 +433,58 @@ def neardup_components(
     Iterative hash-to-min label propagation: each round every node
     takes the min label among itself and its neighbors -- converges in
     O(graph diameter) rounds; near-dup graphs are unions of small
-    cliques, so 2-3 rounds in practice. Per round: one shuffle join
-    (labels onto edges) + one groupBy min + a left join back.
-    ``localCheckpoint`` truncates lineage each round so plans don't
-    grow; the convergence test rides the same pass (max of per-row
-    change flags), not a separate join. At 100 TB the edge list is the
-    LSH/jaccard pair output (linear in docs, not quadratic), labels are
-    2 longs per doc, and every round is shuffle-partitioned by doc_id.
+    cliques, so 2-3 rounds in practice. Exhausting ``max_iter`` rounds
+    with labels still moving raises rather than return stale labels.
 
-    The symmetrized edge table is materialized ONCE via
-    session.iterative_loop_side keyed on ``u``: under the broadcast
-    ceiling the 2-long-per-doc label table broadcasts and a cheap
-    serialized checkpoint of the edges suffices; past it the edges
-    become a partition+order pinned cache (a checkpoint loses its
-    partitioning under AQE, see pinned_partition_cache's docstring),
-    so every round's labels-onto-edges join still exchanges only the
-    label table, never the edge table -- at WCC scale (110M+ edges
-    when this backs weakly_connected_components) the per-round edge
-    re-shuffle was the loop's dominant cost."""
+    Pairs whose ends are not both in ``docs`` (NULL ends included)
+    carry no label through any round, so they are dropped first, and
+    the kept pairs are materialized once. Their count picks the lane:
+
+    - at or under ``session.PER_ROUND_BCAST_CEILING_ROWS`` (the
+      per-round broadcast bound) the pairs are collected as Arrow and
+      the same rounds run on the driver in numpy
+      (:func:`_hash_to_min_local`). A 2,500-doc batch yields tens of
+      pairs, on which the distributed loop spent ~13 Spark jobs. The
+      labels come back as a broadcast local relation joined onto
+      ``docs``. Numpy rounds rather than a union-find keep the
+      round count, and with it the ``max_iter`` raise, identical to
+      the distributed lane's;
+    - past it, the distributed rounds (:func:`_hash_to_min_rounds`):
+      per round one join (labels onto edges) + one groupBy min + a
+      left join back, ``localCheckpoint`` truncating lineage, the
+      convergence test riding the same pass. The symmetrized edge
+      table is materialized ONCE via session.iterative_loop_side keyed
+      on ``u``: under the broadcast ceiling the 2-long-per-doc label
+      table broadcasts and a cheap serialized checkpoint of the edges
+      suffices; past it the edges become a partition+order pinned
+      cache (a checkpoint loses its partitioning under AQE, see
+      pinned_partition_cache's docstring), so every round's
+      labels-onto-edges join still exchanges only the label table,
+      never the edge table -- at WCC scale (110M+ edges when this
+      backs weakly_connected_components) the per-round edge
+      re-shuffle was the loop's dominant cost.
+
+    The lane follows the observed pair count only; both give the same
+    labels and raise on the same inputs."""
     from ..session import (
         PER_ROUND_BCAST_CEILING_ROWS,
         iterative_loop_side,
     )
 
+    ids = docs.select("doc_id")
+    kept = (
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .join(ids.select(F.col("doc_id").alias("u")), "u", "left_semi")
+        .join(ids.select(F.col("doc_id").alias("v")), "v", "left_semi")
+        # a USING join puts its key first; the union below is positional
+        .select("u", "v")
+        .localCheckpoint()
+    )
+    if kept.count() <= PER_ROUND_BCAST_CEILING_ROWS:
+        return _hash_to_min_local(docs, kept.toArrow(), max_iter)
     n_docs = docs.count()
     edges = iterative_loop_side(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))),
+        kept.union(kept.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         "u",
         small_side_rows=n_docs,
         # round 12: the pinned-state loop stops broadcasting the label
@@ -450,6 +497,62 @@ def neardup_components(
     finally:
         edges.unpersist()
     return labels
+
+
+def _not_converged(max_iter: int) -> RuntimeError:
+    # Exhausting max_iter with changes still flowing means some
+    # component's diameter exceeds max_iter: the stale labels would
+    # silently under-dedup downstream (canonical-doc filters keep
+    # extra near-duplicates with no signal). Fail loudly instead.
+    return RuntimeError(
+        f"neardup_components did not converge within {max_iter} "
+        f"iterations -- a component's diameter exceeds max_iter; "
+        f"raise max_iter (propagation moves the min label one "
+        f"hop per round)"
+    )
+
+
+def _hash_to_min_local(docs: DataFrame, pairs, max_iter: int) -> DataFrame:
+    """The driver lane of neardup_components: hash-to-min rounds over
+    an Arrow table of ``(u, v)`` pairs whose ends are all in ``docs``.
+    Ids become positions in their sorted distinct list (Arrow sorts
+    strings bytewise, as Spark's min does), so the min position is the
+    min id. A round is the distributed round verbatim: every node
+    takes the min of its own and its neighbours' previous labels
+    (``np.minimum.at`` over both edge directions)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u, v = pairs["u"], pairs["v"]
+    ends = pc.unique(pa.chunked_array(u.chunks + v.chunks, u.type))
+    ends = ends.take(pc.sort_indices(ends))
+    u = pc.index_in(u, value_set=ends).to_numpy()
+    v = pc.index_in(v, value_set=ends).to_numpy()
+    label = np.arange(len(ends))
+    for _ in range(max_iter):
+        nxt = label.copy()
+        np.minimum.at(nxt, v, label[u])
+        np.minimum.at(nxt, u, label[v])
+        if (nxt == label).all():
+            break
+        label = nxt
+    else:
+        raise _not_converged(max_iter)
+    comp = docs.sparkSession.createDataFrame(
+        pa.table({"doc_id": ends, "component": ends.take(label)})
+    )
+    doc_type = docs.schema["doc_id"].dataType
+    return (
+        docs.select("doc_id")
+        .join(F.broadcast(comp), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce(
+                F.col("component").cast(doc_type), F.col("doc_id")
+            ).alias("component"),
+        )
+    )
 
 
 def _hash_to_min_rounds(
@@ -526,17 +629,7 @@ def _hash_to_min_rounds(
             if stepped.agg(F.max("changed")).first()[0] is not True:
                 break
         else:
-            # Exhausting max_iter with changes still flowing means some
-            # component's diameter exceeds max_iter: the stale labels
-            # would silently under-dedup downstream (canonical-doc
-            # filters keep extra near-duplicates with no signal). Fail
-            # loudly instead.
-            raise RuntimeError(
-                f"neardup_components did not converge within {max_iter} "
-                f"iterations -- a component's diameter exceeds max_iter; "
-                f"raise max_iter (propagation moves the min label one "
-                f"hop per round)"
-            )
+            raise _not_converged(max_iter)
         if pinned_state:
             # eager copy OFF the final round's cache: the return value
             # must not depend on a cache the finally below drops
@@ -561,11 +654,8 @@ def contamination_screen(
     shingle set is BROADCAST; the train side streams through one
     broadcast hash join + one doc_id-keyed count-distinct agg -- no
     all-pairs step, no shuffle of the corpus by shingle."""
-    t = train.select("doc_id", F.explode(token_ngrams(n=n)).alias("g"))
-    e = (
-        eval_set.select(F.explode(token_ngrams(n=n)).alias("g"))
-        .dropDuplicates(["g"])
-    )
+    t = gram_rows(train, n, "doc_id").select("doc_id", "g")
+    e = gram_rows(eval_set, n).select("g").dropDuplicates(["g"])
     # token_ngrams is array_distinct'd and e is deduped, so the join
     # output is already unique per (doc_id, g): a plain count IS the
     # distinct count, without forcing the two-phase distinct-aggregate

@@ -1496,12 +1496,7 @@ def c15_incremental_dedup(spark, sf_dir):
     exact_ok = ih.join(ch, "h", "left_anti").select("doc_id")
 
     def grams(df):
-        base = df.select(
-            F.col("doc_id").alias("id"), "lang", D.token_ngrams(n=2).alias("gs")
-        )
-        return base.select(
-            "id", "lang", F.size("gs").alias("sz"), F.explode("gs").alias("g")
-        )
+        return D.gram_rows(df, 2, F.col("doc_id").alias("id"), "lang")
 
     near = (
         D.set_overlap(grams(incoming), grams(corpus), ["lang", "g"])
@@ -3728,25 +3723,11 @@ def c64_containment_pairs(spark, sf_dir):
     first (the c27/c32 screen) exactly as in cross-source overlap
     (c30)."""
     docs = _docs(spark, sf_dir)
-    t = F.split(F.col("text"), " ")
-    grams = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(t) - 3, F.lit(1))
-                ),
-                lambda i: F.concat_ws(" ", F.slice(t, i, 4)),
-            )
-        ).alias("gs"),
-    )
     # materialized once: exploded feeds BOTH sides of the
     # set_overlap self-join (whose docstring carries the in-row size
     # rationale); |A| is sz_a
-    exploded = grams.select(
-        F.col("doc_id").alias("id"),
-        F.size("gs").alias("sz"),
-        F.explode("gs").alias("g"),
+    exploded = D.gram_rows(
+        docs, 4, F.col("doc_id").alias("id")
     ).localCheckpoint()
     return (
         D.set_overlap(exploded, exploded, ["g"], operator.ne)

@@ -480,6 +480,22 @@ def test_ngram_jaccard_one_equi_join_one_agg_pair(spark, sf_small):
     assert plan.count("partial_count(1)") == 1, plan
 
 
+def test_gram_rows_build_grams_once(spark):
+    """dedup.gram_rows (the exploded shingles behind c02/c15/c17/c21/
+    c42/c64) builds each doc's gram array ONCE: a plain explode makes
+    Spark infer a size(gs) > 0 filter and push it below the projection
+    that names gs, inlining -- and so re-running -- the gram
+    expression under the explode."""
+    from dgraph_etl_spark.functions.dedup import gram_rows
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
+    plan = (
+        gram_rows(docs, 2, "doc_id")
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("transform(") == 1, plan
+
+
 def test_link_prediction_threshold_below_anti_join(spark, sf_small):
     """g15: the set sizes (degrees) ride in-row through the wedge's
     set_overlap, so the jaccard >= threshold Filter is computable --

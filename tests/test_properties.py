@@ -115,18 +115,20 @@ def test_c04_ivf_recall_vs_brute_force(spark, sf_small):
 
 # ---------------------------------------------------------------- C12
 
+# 12 docs (0-11); 12 and 13 are pair ends missing from docs, None a
+# NULL end: both lanes must ignore every pair that touches either
+_end = st.one_of(st.integers(0, 13), st.none())
 _edges = st.lists(
-    st.tuples(st.integers(0, 11), st.integers(0, 11)).filter(
-        lambda p: p[0] != p[1]
-    ),
+    st.tuples(_end, _end).filter(lambda p: p[0] != p[1]),
     min_size=0,
     max_size=20,
 )
 
 
-def _sequential_components(n_nodes, pairs):
-    """Union-find ground truth: component = min node id reachable."""
-    parent = list(range(n_nodes))
+def _sequential_components(ids, pairs):
+    """Union-find ground truth: component = min id reachable over the
+    pairs whose ends are both in ``ids``."""
+    parent = {i: i for i in ids}
 
     def find(x):
         while parent[x] != x:
@@ -135,31 +137,54 @@ def _sequential_components(n_nodes, pairs):
         return x
 
     for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {i: find(i) for i in range(n_nodes)}
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
 
 
-@given(_edges)
+@pytest.fixture(params=["driver", "distributed"])
+def components_lane(request, monkeypatch):
+    """neardup_components picks its lane from the kept pair count
+    against session.PER_ROUND_BCAST_CEILING_ROWS, read at call time:
+    toy graphs always take the driver lane unless the ceiling drops
+    below zero (below any count, the empty pair set's included)."""
+    import dgraph_etl_spark.session as S
+
+    if request.param == "distributed":
+        monkeypatch.setattr(S, "PER_ROUND_BCAST_CEILING_ROWS", -1)
+    return request.param
+
+
+@given(_edges, st.booleans())
 @_settings
-def test_c12_components_equal_union_find(spark, pairs):
+def test_c12_components_equal_union_find(
+    spark, components_lane, pairs, string_ids
+):
+    """Both lanes equal union-find, on LONG ids and on STRING ids
+    (g12/g23 pass string node ids; their min is the bytewise one,
+    "10" < "9"), with pair ends missing from docs and NULL ends
+    ignored."""
     from dgraph_etl_spark.functions.dedup import neardup_components
 
-    n = 12
-    docs = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+    key = str if string_ids else int
+    id_type = "string" if string_ids else "bigint"
+    ids = [key(i) for i in range(12)]
+    pairs = [
+        tuple(None if x is None else key(x) for x in p) for p in pairs
+    ]
+    docs = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_type}")
     pdf = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in pairs] or [(0, 0)],
-        ["doc_a", "doc_b"],
+        [(min(a, b), max(a, b)) if None not in (a, b) else (a, b)
+         for a, b in pairs],
+        f"doc_a {id_type}, doc_b {id_type}",
     )
-    if not pairs:
-        pdf = pdf.filter("doc_a <> doc_b")  # empty edge set
     got = {
         r.doc_id: r.component
         for r in neardup_components(docs, pdf).collect()
     }
-    want = _sequential_components(n, pairs)
-    assert got == want
+    assert got == _sequential_components(ids, pairs)
 
 
 def test_g29_hits_closed_forms(spark):
@@ -262,9 +287,10 @@ def test_c02_simhash_hamming_pairs_exact(spark):
     )
 
 
-def test_c12_components_raise_on_nonconvergence(spark):
+def test_c12_components_raise_on_nonconvergence(spark, components_lane):
     """A path graph's diameter exceeds a tiny max_iter: the propagation
-    must FAIL LOUDLY, never return stale (under-deduped) labels."""
+    must FAIL LOUDLY, never return stale (under-deduped) labels. Both
+    lanes run the same rounds, so they raise on the same inputs."""
     import pytest
 
     from dgraph_etl_spark.functions.dedup import neardup_components
@@ -274,8 +300,10 @@ def test_c12_components_raise_on_nonconvergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
     )
+    # label 0 reaches node 7 in round 7 and round 8 moves nothing: 7
+    # rounds are one too few, 8 enough
     with pytest.raises(RuntimeError, match="did not converge"):
-        neardup_components(docs, chain, max_iter=2)
+        neardup_components(docs, chain, max_iter=n - 1)
     labels = neardup_components(docs, chain, max_iter=n).collect()
     assert {r.component for r in labels} == {0}
 
@@ -1382,13 +1410,14 @@ def test_set_overlap_equals_python_set_reference(spark):
     assert [tuple(r) for r in n.collect()] == [(5, 6, 3, 3, 3)]
 
 
-def test_c02_null_text_singletons_across_shingle_lanes(spark):
+def test_c02_null_text_singletons_across_shingle_lanes(spark, monkeypatch):
     """The NULL-text singleton contract holds in the SHINGLE lanes too:
     token_ngrams must not fabricate the [""] shingle (concat_ws over a
     NULL slice) and rolled_ngram_hashes must not fabricate the constant
     [0] shingle -- either one pairs every NULL-text doc with its
     NULL-text peers (LSH: the full quadratic clique). NULL-text docs
-    must emit NO candidate pairs from either lane."""
+    must emit NO candidate pairs from either lane, nor from c64's
+    containment pairs (its DuckDB oracle gives them no shingles)."""
     from dgraph_etl_spark.functions.dedup import (
         lsh_candidate_pairs,
         ngram_jaccard_pairs,
@@ -1416,6 +1445,46 @@ def test_c02_null_text_singletons_across_shingle_lanes(spark):
     assert {(r.doc_a, r.doc_b) for r in jac} == {(3, 4)}, jac
     lsh = lsh_candidate_pairs(docs).collect()
     assert all({r.doc_a, r.doc_b} == {3, 4} for r in lsh), lsh
+
+    from dgraph_etl_spark.registry import REGISTRY
+    from dgraph_etl_spark.suites import llm_extensions
+
+    monkeypatch.setattr(llm_extensions, "_docs", lambda spark, sf_dir: docs)
+    c64 = REGISTRY["c64_containment_pairs"].fn(spark, None).collect()
+    assert {(r.doc_a, r.doc_b) for r in c64} == {(3, 4), (4, 3)}, c64
+
+
+def _reference_ngrams(text, n):
+    """token_ngrams in plain Python: the distinct space-joined n-token
+    windows in first-seen order; a text shorter than n tokens gives
+    itself as its one gram, NULL gives NULL."""
+    if text is None:
+        return None
+    t = text.split(" ")
+    grams = [" ".join(t[i : i + n]) for i in range(max(len(t) - n + 1, 1))]
+    return list(dict.fromkeys(grams))
+
+
+def test_token_ngrams_equal_python_reference(spark):
+    """token_ngrams equals a pure-Python reference on the edge texts
+    (NULL, empty, a lone space, one token, an empty token between
+    double spaces, repeated grams, non-ASCII), n = 1..4, and its
+    transform lambda holds no split(): a lambda that re-splits the text
+    at every position makes the grams O(tokens^2) per doc."""
+    from dgraph_etl_spark.functions.dedup import token_ngrams
+
+    lam = str(token_ngrams(n=2)).split("->", 1)[1]
+    assert "split(" not in lam, lam
+
+    texts = [None, "", " ", "a", "a  b c", "x y x y x y", "a b c d e f",
+             "héllo wörld 日本 語 héllo wörld"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id int, text string"
+    )
+    for n in range(1, 5):
+        got = dict(docs.select("doc_id", token_ngrams(n=n)).collect())
+        want = {i: _reference_ngrams(t, n) for i, t in enumerate(texts)}
+        assert got == want, n
 
 
 def test_c06_language_id_null_text_is_und(spark):

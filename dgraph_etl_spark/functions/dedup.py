@@ -9,8 +9,8 @@ Scale design:
   NUM_BANDS buckets -> candidate pairs only within a bucket. The
   quadratic step is confined to bucket-local joins; at 100 TB bucket
   sizes stay bounded because the band hash spreads uniformly.
-- SimHash: 64-bit signature entirely JVM-side -- one xxhash64 per
-  token, per-bit majority vote as 64 codegen'd conditional sums;
+- SimHash: 60-bit signature entirely JVM-side -- one md5_int60 per
+  token, per-bit majority vote as 60 codegen'd conditional sums;
   candidate pairs = exact-signature buckets, or Hamming<=r via
   pigeonhole banding (r+1 chunks, bucket-local join, exact
   bit_count(xor) filter).
@@ -18,6 +18,10 @@ Scale design:
   SQL-expressible, so fully oracle-checked. Its pairs come from
   ``set_overlap``, the exact set-overlap join shared with the c15
   screen, c64 containment and g15 link prediction.
+
+One hash family: every token hash is ``md5_int60`` (md5-derived, so a
+DuckDB oracle replays MinHash signatures, LSH band keys and SimHash
+signatures value-for-value).
 """
 
 from __future__ import annotations
@@ -141,14 +145,22 @@ def gram_rows(docs: DataFrame, n: int, *cols: Column | str) -> DataFrame:
 _MERSENNE31 = 2_147_483_647
 
 
-def token_hashes(col: Column | str = "text", portable: bool = False) -> Column:
-    """Per-token hash array reduced mod P: one xxhash64 per token by
-    default; ``portable=True`` swaps in the md5-derived 60-bit hash
-    (_portable_token_hash) so a SQL oracle can replay every downstream
-    MinHash value bit-for-bit."""
-    hash_fn = _portable_token_hash if portable else F.xxhash64
+def md5_int60(c: Column) -> Column:
+    """The 60-bit integer hash both engines compute identically: the
+    first 15 hex digits of md5, parsed as an integer (Spark:
+    conv(_, 16, 10); DuckDB: CAST('0x' || substr(md5(x), 1, 15) AS
+    BIGINT)). 15 digits keep the value inside BIGINT in both. The one
+    home of this hash: the MinHash/SimHash token hashes and the b72/s16
+    table fingerprints all call it."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def token_hashes(col: Column | str = "text") -> Column:
+    """Per-token hash array reduced mod P: one md5_int60 per token, so
+    a SQL oracle can replay every downstream MinHash value
+    bit-for-bit."""
     return F.transform(
-        tokens(col), lambda x: F.pmod(hash_fn(x), F.lit(_MERSENNE31))
+        tokens(col), lambda x: F.pmod(md5_int60(x), F.lit(_MERSENNE31))
     )
 
 
@@ -198,13 +210,11 @@ def minhash_mix_constants(num_hashes: int = NUM_HASHES) -> list[tuple[int, int]]
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = NUM_HASHES, portable: bool = False
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """C2: MinHash signature per document. ONE hash per shingle
-    (xxhash64 by default; md5-derived when ``portable`` so SQL oracles
-    replay it), then num_hashes affine re-mixes (universal hashing mod
-    2^31-1) min-folded ENTIRELY IN-ROW: each h_i is
+    (rolled from md5_int60 token hashes, so SQL oracles replay it),
+    then num_hashes affine re-mixes (universal hashing mod 2^31-1)
+    min-folded ENTIRELY IN-ROW: each h_i is
     ``array_min(transform(shingle_hashes, x -> (a_i*x+b_i) mod P))``
     over the per-doc shingle-hash array -- a narrow projection inside
     the scan's codegen span.
@@ -224,9 +234,7 @@ def minhash_signatures(
     merged -- doc_id is the fixture's primary key (asserted unique at
     every sf; the oracle's GROUP BY doc_id defines the same contract).
     """
-    sh = docs.select(
-        "doc_id", token_hashes(portable=portable).alias("th")
-    ).select(
+    sh = docs.select("doc_id", token_hashes().alias("th")).select(
         # rolled_ngram_hashes needs the materialized array column (see
         # its docstring); hbs in turn materializes the shingle array so
         # each of the 32 folds below is one pass over it, not a
@@ -255,7 +263,6 @@ def band_table(
     docs: DataFrame,
     num_hashes: int = NUM_HASHES,
     num_bands: int = NUM_BANDS,
-    portable: bool = False,
 ) -> DataFrame:
     """(doc_id, band, band_hash): the banded-signature relation whose
     (band, band_hash) key drives the LSH bucket join's shuffle — the
@@ -269,14 +276,12 @@ def band_table(
             "trailing hashes would be min-aggregated but never banded, "
             "silently lowering recall below what the parameters imply"
         )
-    sig = minhash_signatures(docs, num_hashes, portable=portable)
+    sig = minhash_signatures(docs, num_hashes)
     per_band = num_hashes // num_bands
 
     def _band_key(b: int) -> Column:
         cols = [F.col(f"h{b * per_band + j}") for j in range(per_band)]
-        if portable:
-            return F.concat_ws(":", *[c.cast("string") for c in cols])
-        return F.xxhash64(*cols)
+        return F.concat_ws(":", *[c.cast("string") for c in cols])
 
     return sig.select(
         "doc_id",
@@ -312,7 +317,7 @@ def lsh_candidate_pairs(
     docs: DataFrame,
     num_hashes: int = NUM_HASHES,
     num_bands: int = NUM_BANDS,
-    portable: bool = False,
+    portable: bool = True,
 ) -> DataFrame:
     """C2: LSH banding -> candidate duplicate pairs. Documents agreeing
     on ALL hashes of any band collide in that band's bucket; the
@@ -331,12 +336,19 @@ def lsh_candidate_pairs(
     unchanged (a hot bucket concentrated in one join task before, one
     collect task now; soak-measured spread 1.02, hottest key 27 rows).
 
-    Band bucket key: xxhash64 over the band's hash tuple by default (8
-    bytes/row shuffled); ``portable=True`` keys on the ':'-joined
-    decimal tuple instead -- a wider key, but one a SQL oracle can
-    rebuild verbatim, which upgrades the query from rows-only to
-    hash-exact certification."""
-    bands = band_table(docs, num_hashes, num_bands, portable)
+    Band bucket key: the ':'-joined decimal tuple of the band's hashes,
+    which a SQL oracle rebuilds verbatim (hash-exact certification).
+
+    ``portable`` is vestigial: the md5 family is the only one, and
+    ``False`` raises. The keyword stays only because the curation
+    benchmark's ``lsh`` op still passes ``portable=True``; it goes once
+    that call drops it."""
+    if not portable:
+        raise ValueError(
+            "lsh_candidate_pairs has one hash family (md5_int60); "
+            "portable=False is no longer supported"
+        )
+    bands = band_table(docs, num_hashes, num_bands)
     buckets = bands.groupBy("band", "band_hash").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
@@ -667,39 +679,21 @@ def contamination_screen(
     )
 
 
-def _portable_token_hash(t):
-    """60-bit integer token hash both engines compute identically:
-    the first 15 hex digits of md5, parsed as an integer (Spark:
-    conv(_, 16, 10); DuckDB: CAST('0x'||substr(md5(t),1,15) AS
-    BIGINT)). Slower per token than xxhash64 (crypto vs xx) but
-    engine-portable, which is what lets the SimHash queries carry a
-    hash-exact SQL oracle instead of a rows-only check."""
-    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
+SIMHASH_BITS = 60
 
 
-def simhash_bits(portable: bool) -> int:
-    return 60 if portable else 64
-
-
-def simhash_signatures(docs: DataFrame, portable: bool = False) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """SimHash signatures, fully JVM-side (no Python anywhere): one
-    hash per token, then the per-bit majority vote as n_bits codegen'd
-    conditional sums over the exploded (doc_id, token_hash) relation.
-    Map-side partial aggregation means the shuffle carries n_bits
-    small longs per *document*, nothing per-token -- at 100 TB the
-    vote is a single hash-aggregate keyed by doc_id.  Bit i is set iff
-    tokens with bit i set strictly outnumber those without (the classic
-    Charikar sum(+/-1) > 0 vote; ties -> 0).
-
-    Default family: xxhash64, 64 bits; bit 63 contributes the signed
-    long MIN_VALUE so the assembled signature is the two's-complement
-    view of the 64-bit pattern (exact, no overflow: partial sums of
-    distinct powers 2^0..2^62 stay below 2^63).  ``portable=True``
-    swaps in the md5-derived 60-bit hash (_portable_token_hash) --
-    4 fewer signature bits, but bit-identical in any engine with md5,
-    so downstream queries are oracle-checkable value-for-value."""
-    n_bits = simhash_bits(portable)
-    hash_fn = _portable_token_hash if portable else F.xxhash64
+    md5_int60 per token, then the per-bit majority vote as
+    SIMHASH_BITS codegen'd conditional sums over the exploded (doc_id,
+    token_hash) relation. Map-side partial aggregation means the
+    shuffle carries SIMHASH_BITS small longs per *document*, nothing
+    per-token -- at 100 TB the vote is a single hash-aggregate keyed
+    by doc_id.  Bit i is set iff tokens with bit i set strictly
+    outnumber those without (the classic Charikar sum(+/-1) > 0 vote;
+    ties -> 0). The signature is a non-negative long below 2^60,
+    bit-identical in any engine with md5, so downstream queries are
+    oracle-checkable value-for-value."""
     # inner explode, not explode_outer: a NULL-text doc has no tokens
     # and therefore NO signature (SQL unnest semantics -- the oracle
     # drops it). explode_outer kept it with signature 0, silently
@@ -707,23 +701,19 @@ def simhash_signatures(docs: DataFrame, portable: bool = False) -> DataFrame:
     # diverging from the hash-exact oracle. (Non-null text always
     # tokenizes to >= 1 token, so no real doc is lost.)
     th = docs.select(
-        "doc_id",
-        F.explode(F.transform(tokens(), lambda t: hash_fn(t))).alias("h"),
+        "doc_id", F.explode(F.transform(tokens(), md5_int60)).alias("h")
     )
     votes = [
         F.sum(
             F.when(F.shiftrightunsigned("h", i).bitwiseAND(F.lit(1)) == 1, F.lit(1))
             .otherwise(F.lit(-1))
         ).alias(f"v{i}")
-        for i in range(n_bits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = th.groupBy("doc_id").agg(*votes)
     contrib = [
-        F.when(
-            F.col(f"v{i}") > 0,
-            F.lit((1 << i) if i < 63 else -(1 << 63)),
-        ).otherwise(F.lit(0))
-        for i in range(n_bits)
+        F.when(F.col(f"v{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        for i in range(SIMHASH_BITS)
     ]
     sig = contrib[0]
     for c in contrib[1:]:
@@ -731,11 +721,11 @@ def simhash_signatures(docs: DataFrame, portable: bool = False) -> DataFrame:
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_buckets(docs: DataFrame, portable: bool = False) -> DataFrame:
+def simhash_buckets(docs: DataFrame) -> DataFrame:
     """Exact-signature SimHash buckets -> candidate groups.  doc_ids is
     emitted as a sorted comma-joined string (scalar column) so results
     stay canonicalizable by flat row-sorting harnesses."""
-    sig = simhash_signatures(docs, portable=portable)
+    sig = simhash_signatures(docs)
     return sig.groupBy("simhash").agg(
         F.concat_ws(
             ",",
@@ -748,11 +738,9 @@ def simhash_buckets(docs: DataFrame, portable: bool = False) -> DataFrame:
     )
 
 
-def simhash_hamming_pairs(
-    docs: DataFrame, r: int = 3, portable: bool = False
-) -> DataFrame:
+def simhash_hamming_pairs(docs: DataFrame, r: int = 3) -> DataFrame:
     """Hamming<=r SimHash candidate pairs via pigeonhole banding: split
-    the n_bits signature into r+1 contiguous chunks -- any pair within
+    the SIMHASH_BITS signature into r+1 contiguous chunks -- any pair within
     Hamming distance r differs in at most r chunks, so it agrees
     EXACTLY on at least one chunk (pigeonhole) and the per-chunk bucket
     equi-join has recall 1.0.  The exact ``bit_count(a XOR b) <= r``
@@ -765,21 +753,11 @@ def simhash_hamming_pairs(
     old ``a.doc_id < b.doc_id`` self-join's, with the signature
     pipeline consumed once and no checkpoint materialization)."""
     chunks = r + 1
-    n_bits = simhash_bits(portable)
-    bounds = [i * n_bits // chunks for i in range(chunks + 1)]
-    sig = simhash_signatures(docs, portable=portable)
-
-    def _mask(width: int) -> Column:
-        # (1 << 64) - 1 exceeds Long.MaxValue and cannot be a Catalyst
-        # long literal (r=0, non-portable: ONE 64-bit chunk); the
-        # all-ones 64-bit mask is -1 in two's complement
-        if width == 64:
-            return F.lit(-1).cast("long")
-        return F.lit((1 << width) - 1)
-
+    bounds = [i * SIMHASH_BITS // chunks for i in range(chunks + 1)]
+    sig = simhash_signatures(docs)
     chunk_cols = [
         F.shiftrightunsigned("simhash", bounds[i]).bitwiseAND(
-            _mask(bounds[i + 1] - bounds[i])
+            F.lit((1 << (bounds[i + 1] - bounds[i])) - 1)
         )
         for i in range(chunks)
     ]

@@ -269,171 +269,6 @@ def blocked_similarity_join(
     )
 
 
-def _srp_planes(n_planes: int, dim: int, seed: int):
-    """The seeded Gaussian hyperplane matrix (n_planes x dim) -- the
-    single source of truth for both signature implementations."""
-    import numpy as np
-
-    return np.random.RandomState(seed).standard_normal((n_planes, dim))
-
-
-def srp_signatures(
-    emb: DataFrame,
-    n_planes: int = 16,
-    seed: int = 7,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Signed-random-projection (SRP / random hyperplane) LSH signature:
-    bit p = sign(<v, r_p>) for n_planes Gaussian hyperplanes, the
-    classic cosine-LSH family (collision probability 1 - theta/pi).
-    The hyperplanes are generated ONCE on the driver from a fixed seed
-    and shipped as a single broadcast 1-row array<array<double>> table
-    (crossJoin against a broadcast single row is a BroadcastNestedLoop
-    that adds the column without any shuffle), so the plan size is
-    independent of dim and the per-row work is n_planes JVM-side
-    higher-order-function dot products -- no Python, no shuffle, and
-    the signature is deterministic across runs/engines for a given
-    (seed, dim). This is the blocking key for near-dup search when NO
-    natural block column exists (blocked_similarity_join's `label` at
-    100 TB is exactly this signature).
-
-    Pass ``dim`` explicitly in pipelines (it is schema metadata the
-    caller owns); when None it is inferred with one driver single-row
-    lookup, which is fine interactively but a needless job in a DAG.
-    """
-    if dim is None:
-        first = emb.select(vec_col).first()
-        dim = len(first[0])
-    planes = _srp_planes(n_planes, dim, seed)
-    planes_df = emb.sparkSession.createDataFrame(
-        [([[float(x) for x in row] for row in planes],)],
-        "planes array<array<double>>",
-    )
-    base = emb.select("vec_id", vec_col, as_double_array(vec_col).alias("_v"))
-    # sig = sum over plane index i of (sign bit i) << i, all inside one
-    # codegen'd transform/aggregate chain over the broadcast planes col
-    plane_bit = lambda pl, i: (  # noqa: E731
-        F.when(
-            dot(F.col("_v"), pl) >= 0,
-            # call_function: the Python shiftleft wrapper only takes an
-            # int literal for numBits, but the SQL function shifts by a
-            # column -- here the plane index from transform()
-            F.call_function("shiftleft", F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-    )
-    sig = F.aggregate(
-        F.transform(F.col("planes"), plane_bit),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        base.crossJoin(F.broadcast(planes_df))
-        .select("vec_id", vec_col, sig.alias("srp_sig"))
-    )
-
-
-def _srp_signatures_literal(
-    emb: DataFrame,
-    n_planes: int,
-    seed: int,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """The original literal-hyperplane form (n_planes x dim literals in
-    the plan). Kept as the differential-test twin for srp_signatures:
-    fine at dim 64, but at production dims (1536+) the plan blows up,
-    which is why the broadcast form is the primary."""
-    planes = _srp_planes(n_planes, dim, seed)
-    base = emb.select("vec_id", vec_col, as_double_array(vec_col).alias("_v"))
-    bits = []
-    for p in range(n_planes):
-        lits = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bits.append(
-            F.when(dot(F.col("_v"), lits) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        )
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return base.select("vec_id", vec_col, sig.cast("long").alias("srp_sig"))
-
-
-def srp_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int = 16,
-    n_bands: int = 2,
-    seed: int = 7,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-duplicate pairs via SRP-LSH banding + exact
-    re-rank: band the n_planes signature bits into n_bands chunks,
-    bucket-join per (band, value), then keep candidates whose EXACT
-    cosine clears the threshold. Precision is 1.0 by construction (the
-    final filter is exact); recall is the LSH trade-off (1 - (1 -
-    p^bits_per_band)^n_bands, p = 1 - theta/pi) -- tested empirically
-    on the fixture. The quadratic step is confined to signature
-    buckets: at 100 TB this replaces blocked_similarity_join's natural
-    block key, and the band table feeds both join sides so it is
-    materialized once (localCheckpoint)."""
-    if n_planes % n_bands:
-        raise ValueError(
-            f"n_planes={n_planes} not divisible by n_bands={n_bands}: "
-            "trailing signature bits would be computed but never "
-            "banded, silently lowering recall (lsh_candidate_pairs' "
-            "guard, applied to the SRP family)"
-        )
-    bits_per_band = n_planes // n_bands
-    mask = (1 << bits_per_band) - 1
-    sig = srp_signatures(emb, n_planes, seed, vec_col, dim=dim)
-    bands = sig.select(
-        "vec_id",
-        vec_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("srp_sig", b * bits_per_band).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    ).localCheckpoint()
-    # round 13: double-cast + L2 norm once per band ROW (on top of the
-    # checkpoint), not once per candidate PAIR -- the surviving pair
-    # work is the dot alone (bit-identical, same folds; see
-    # blocked_similarity_join)
-    prep = bands.select(
-        "vec_id", "band", "band_val", as_double_array(vec_col).alias("vd")
-    ).withColumn("nrm", l2_norm(F.col("vd")))
-    a = prep.alias("a")
-    b = prep.alias("b")
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("a.vd"), F.col("b.vd")),
-            F.col("a.nrm") * F.col("b.nrm"),
-        ),
-        4,
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            sim.alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-
-
 def rademacher_planes(n_planes: int, dim: int, tag: str):
     """Deterministic Rademacher (+/-1) hyperplane matrix derived from
     md5 -- the ENGINE-PORTABLE SRP family. Entry (p, d) is +1 when the
@@ -473,13 +308,12 @@ def srp_bands_fixedpoint(
     signature is sign(sum_d r(p,d)*q_d) computed as an integer fold --
     no float accumulation, so the buckets are bit-identical across
     engines, partitionings and retries (the property that lets a
-    bucketed query keep a hash-exact SQL oracle; Gaussian
-    srp_signatures is rows-only-checkable). Planes are +/-1 literals
-    in the plan (n_planes*dim small ints -- fine at embedding dims up
-    to a few hundred; at 1536+ switch to the 1-row broadcast pattern
-    of srp_signatures, trading a benign BNLJ for plan size). One
-    projection + one posexplode: n_bands rows per input row, no
-    shuffle, no Python."""
+    bucketed query keep a hash-exact SQL oracle). Planes are +/-1
+    literals in the plan (n_planes*dim small ints -- fine at embedding
+    dims up to a few hundred; at 1536+ the planes would better ride a
+    broadcast 1-row array column, trading a benign BNLJ for plan
+    size). One projection + one posexplode: n_bands rows per input
+    row, no shuffle, no Python."""
     if n_planes % n_bands:
         raise ValueError(
             f"n_planes={n_planes} not divisible by n_bands={n_bands}: "
@@ -585,7 +419,7 @@ def hard_negatives_srp(
     )
 
 
-def srp_neardup_pairs_portable(
+def srp_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 16,
@@ -594,15 +428,18 @@ def srp_neardup_pairs_portable(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
-    """srp_neardup_pairs on the DETERMINISTIC Rademacher family
-    (srp_bands_fixedpoint) instead of seeded Gaussian planes: same
-    banding trade-off and the same exact-cosine precision-1.0 filter,
-    but the buckets are bit-identical in any engine with md5 -- so the
-    registered query carries a hash-exact SQL oracle where the
-    Gaussian form could only be rows-only-checked. Same scale shape:
-    bucket-local candidate join, cosine computed pre-dedup so the
-    (vec_a, vec_b) dedup shuffles three scalar columns with a map-side
-    partial_max, never the embedding arrays."""
+    """Embedding near-duplicate pairs via SRP-LSH banding + exact
+    re-rank: bucket rows by the deterministic Rademacher SRP family
+    (srp_bands_fixedpoint: n_planes signature bits in n_bands bands),
+    join per (band, band_val), then keep candidates whose EXACT cosine
+    clears the threshold. Precision is 1.0 by construction (the final
+    filter is exact); recall is the LSH trade-off (1 - (1 -
+    p^bits_per_band)^n_bands, p = 1 - theta/pi) -- tested empirically
+    on the fixture. The buckets are bit-identical in any engine with
+    md5, so the registered query (c20) carries a hash-exact SQL
+    oracle. The quadratic step is confined to signature buckets: at
+    100 TB this replaces blocked_similarity_join's natural block
+    key."""
     bands = srp_bands_fixedpoint(
         emb,
         n_planes=n_planes,

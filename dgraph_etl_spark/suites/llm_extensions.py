@@ -79,11 +79,11 @@ def c01_prefix_dedup(spark, sf_dir):
 
 
 def _minhash_lsh_oracle(num_hashes: int = 32, num_bands: int = 8) -> str:
-    """DuckDB replay of the portable MinHash+LSH pipeline: md5-derived
-    token hashes mod P, rolled 3-gram shingle hashes, the SAME (a_i,b_i)
+    """DuckDB replay of the MinHash+LSH pipeline: md5-derived token
+    hashes mod P, rolled 3-gram shingle hashes, the SAME (a_i,b_i)
     affine mixes (interpolated as literals from minhash_mix_constants),
     min-folded signatures, ':'-joined band keys, bucket-local self-join.
-    Bit-identical to lsh_candidate_pairs(portable=True)."""
+    Bit-identical to lsh_candidate_pairs."""
     P = 2_147_483_647
     mixes = D.minhash_mix_constants(num_hashes)
     mins = ",\n             ".join(
@@ -138,12 +138,9 @@ def _minhash_lsh_oracle(num_hashes: int = 32, num_bands: int = 8) -> str:
 def c02_minhash_lsh_pairs(spark, sf_dir):
     """C2: MinHash(32) + LSH(8 bands) candidate duplicate pairs. The
     quadratic step is bucket-local by construction (band-key equi-join).
-    Runs the portable md5-derived hash family so the oracle replays
-    shingle hashes, affine mixes, signatures and band keys
-    value-for-value in SQL (was rows-only on the xxhash64 family, which
-    remains the default for engines that don't need cross-engine
-    parity)."""
-    return D.lsh_candidate_pairs(_docs(spark, sf_dir), portable=True)
+    The md5-derived hash family lets the oracle replay shingle hashes,
+    affine mixes, signatures and band keys value-for-value in SQL."""
+    return D.lsh_candidate_pairs(_docs(spark, sf_dir))
 
 
 _SIMHASH_SIG_SQL = """
@@ -181,13 +178,10 @@ _SIMHASH_SIG_SQL = """
 )
 def c02_simhash_buckets(spark, sf_dir):
     """SimHash signature buckets (md5-derived 60-bit token hashes + 60
-    codegen'd bit-vote sums; no Python). The portable hash family
-    makes the signature bit-identical in DuckDB, so this carries a
-    hash-exact oracle (it was rows-only when built on xxhash64; the
-    xxhash64 family remains the default in functions/dedup.py for
-    engines that don't need cross-engine parity). doc_ids is a sorted
-    comma-joined string."""
-    return D.simhash_buckets(_docs(spark, sf_dir), portable=True)
+    codegen'd bit-vote sums; no Python). The md5 hash family makes the
+    signature bit-identical in DuckDB, so this carries a hash-exact
+    oracle. doc_ids is a sorted comma-joined string."""
+    return D.simhash_buckets(_docs(spark, sf_dir))
 
 
 @register(
@@ -213,13 +207,13 @@ def c02_simhash_buckets(spark, sf_dir):
 )
 def c02_simhash_hamming_pairs(spark, sf_dir):
     """SimHash Hamming<=3 near-dup pairs: pigeonhole banding (4 15-bit
-    chunks of the portable 60-bit signature -> bucket-local join) +
+    chunks of the md5-derived 60-bit signature -> bucket-local join) +
     exact bit_count(xor) filter, so the output is exactly the
     Hamming<=3 pair set -- now hash-exact against the oracle (the
     md5-derived hash family replays in SQL); exactness vs brute-force
     Hamming is additionally property-tested
     (tests/test_properties.py)."""
-    return D.simhash_hamming_pairs(_docs(spark, sf_dir), r=3, portable=True)
+    return D.simhash_hamming_pairs(_docs(spark, sf_dir), r=3)
 
 
 # the 2-gram lang-blocked Jaccard candidate CTEs, ONE definition
@@ -1229,19 +1223,17 @@ def c20_srp_neardup(spark, sf_dir):
     (cosine LSH family) + exact re-rank -- the scale path when no
     natural block column exists. Precision 1.0 by construction (exact
     cosine filter); recall is the banding trade-off, measured >=0.97 on
-    the fixture in tests/test_properties.py (both plane families).
+    the fixture in tests/test_properties.py.
     Banding is tuned to the similarity regime: the fixture's planted
     pairs sit near tau=0.4 (collision prob ~0.63/bit), so 8 bands x 2
     bits; a production near-dup screen at tau>=0.9 (~0.86/bit) wants
-    fewer, wider bands (e.g. 2 x 8). The registered form uses the
-    deterministic md5-Rademacher planes with integer fixed-point
-    projections (similarity.srp_bands_fixedpoint), so the oracle
-    replays the buckets hash-exactly -- this was rows-only when the
-    hyperplanes were seeded Gaussians; that family remains available
-    as similarity.srp_neardup_pairs."""
+    fewer, wider bands (e.g. 2 x 8). The planes are the deterministic
+    md5-Rademacher family with integer fixed-point projections
+    (similarity.srp_bands_fixedpoint), so the oracle replays the
+    buckets hash-exactly."""
     from ..catalog import embedding_dim
 
-    return S.srp_neardup_pairs_portable(
+    return S.srp_neardup_pairs(
         _emb(spark, sf_dir),
         threshold=0.4,
         n_planes=16,

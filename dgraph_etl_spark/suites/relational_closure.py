@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import register_views
+from ..functions.dedup import md5_int60
 from ..registry import REGISTRY, register
 from ..staging import source_tag, source_version, stage
 from ..views import oracle_with_views as V
@@ -2905,8 +2906,8 @@ def b72_table_fingerprint(spark, sf_dir):
     copies of a table compare by exchanging 16 bytes instead of
     terabytes, and XOR's commutativity makes the result partitioning-
     independent -- a plain map + one combine, no shuffle of data rows.
-    15 hex digits (60 bits) keep the parse inside BIGINT in both
-    engines. Double columns enter the hash as fixed-point micros
+    The row hash is md5_int60 (60 bits, inside BIGINT in both
+    engines). Double columns enter the hash as fixed-point micros
     bigints, never as strings: Spark (Java) renders doubles in
     scientific notation outside (1e-3, 1e7) while DuckDB renders them
     positionally, so a raw double in concat_ws would fingerprint the
@@ -2914,11 +2915,8 @@ def b72_table_fingerprint(spark, sf_dir):
     rule)."""
 
     def fp(df, name, cols):
-        row_hash = F.conv(
-            F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-        ).cast("bigint")
         return (
-            df.select(row_hash.alias("h"))
+            df.select(md5_int60(F.concat_ws("|", *cols)).alias("h"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.expr("bit_xor(h)").alias("fingerprint"),

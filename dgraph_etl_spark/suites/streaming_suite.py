@@ -24,6 +24,7 @@ from ..pipeline.edges import (
     merge_max_with_existing,
 )
 from ..functions import similarity as _sim
+from ..functions.dedup import md5_int60
 from ..registry import register
 from ..streaming.core import (
     earlier_epoch_dirs,
@@ -802,13 +803,7 @@ def s16_stream_fingerprint(spark, sf_dir):
         # it can never XOR itself out or double its count. XOR and SUM
         # are associative, so the final fold over partials below is
         # exactly the incremental fold.
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", "doc_id", "text")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        h = md5_int60(F.concat_ws("|", "doc_id", "text"))
         write_epoch(
             batch_df.select(h.alias("h")).agg(
                 F.count(F.lit(1)).alias("n_rows"),

@@ -597,9 +597,7 @@ def _dedup_skew(args) -> None:
         register_views(spark, sf_dir)
         docs = spark.table("documents")
         return [
-            # portable=True: the certified c02 surface's actual key
-            ("c02 band-bucket join", band_table(docs, portable=True),
-             ["band", "band_hash"]),
+            ("c02 band-bucket join", band_table(docs), ["band", "band_hash"]),
             ("c27 span-hash window", span_doc_counts(docs), ["h"]),
             ("c30 source self-join", source_span_sets(docs), ["h"]),
         ]

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import RoundLane
 from .text import tokens
 
 NUM_HASHES = 32
@@ -463,25 +464,17 @@ def neardup_components(
       the distributed lane's;
     - past it, the distributed rounds (:func:`_hash_to_min_rounds`):
       per round one join (labels onto edges) + one groupBy min + a
-      left join back, ``localCheckpoint`` truncating lineage, the
-      convergence test riding the same pass. The symmetrized edge
-      table is materialized ONCE via session.iterative_loop_side keyed
-      on ``u``: under the broadcast ceiling the 2-long-per-doc label
-      table broadcasts and a cheap serialized checkpoint of the edges
-      suffices; past it the edges become a partition+order pinned
-      cache (a checkpoint loses its partitioning under AQE, see
-      pinned_partition_cache's docstring), so every round's
-      labels-onto-edges join still exchanges only the label table,
-      never the edge table -- at WCC scale (110M+ edges when this
-      backs weakly_connected_components) the per-round edge
-      re-shuffle was the loop's dominant cost.
+      left join back, lineage truncated per round, the convergence
+      test riding the same pass. The symmetrized edge table is
+      materialized ONCE, keyed on ``u``, and the labels and edges
+      follow session.RoundLane's policy, picked from the doc count: at
+      WCC scale (110M+ edges when this backs
+      weakly_connected_components) the per-round edge re-shuffle it
+      avoids was the loop's dominant cost.
 
     The lane follows the observed pair count only; both give the same
     labels and raise on the same inputs."""
-    from ..session import (
-        PER_ROUND_BCAST_CEILING_ROWS,
-        iterative_loop_side,
-    )
+    from ..session import PER_ROUND_BCAST_CEILING_ROWS
 
     ids = docs.select("doc_id")
     kept = (
@@ -494,21 +487,7 @@ def neardup_components(
     )
     if kept.count() <= PER_ROUND_BCAST_CEILING_ROWS:
         return _hash_to_min_local(docs, kept.toArrow(), max_iter)
-    n_docs = docs.count()
-    edges = iterative_loop_side(
-        kept.union(kept.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        "u",
-        small_side_rows=n_docs,
-        # round 12: the pinned-state loop stops broadcasting the label
-        # side already at the per-round ceiling, so the edge side must
-        # be pinned from the same boundary (see _hash_to_min_rounds)
-        pin_at_rows=PER_ROUND_BCAST_CEILING_ROWS,
-    )
-    try:
-        labels = _hash_to_min_rounds(edges, docs, max_iter, n_docs=n_docs)
-    finally:
-        edges.unpersist()
-    return labels
+    return _hash_to_min_rounds(docs, kept, max_iter)
 
 
 def _not_converged(max_iter: int) -> RuntimeError:
@@ -568,56 +547,29 @@ def _hash_to_min_local(docs: DataFrame, pairs, max_iter: int) -> DataFrame:
 
 
 def _hash_to_min_rounds(
-    edges: DataFrame, docs: DataFrame, max_iter: int, n_docs: int | None = None
+    docs: DataFrame, kept: DataFrame, max_iter: int
 ) -> DataFrame:
-    from ..session import (
-        PER_ROUND_BCAST_CEILING_ROWS,
-        pinned_partition_cache,
-        pinned_state_cache,
-    )
-
-    if n_docs is None:
-        n_docs = docs.count()
-    # Lane boundary (round 12, the pagerank loop's restructure in
-    # traverse._pagerank_rounds): under the per-round broadcast
-    # ceiling, BOTH node-table sides broadcast EXPLICITLY (checkpointed
-    # frames carry no size stats, so the static planner never
-    # broadcasts them unaided, and AQE's runtime conversion still
-    # writes the other side's map-side shuffle files first) -- the
-    # label side protects the O(edges) join, the nbr_min side the step
-    # join. At or past it, per-round broadcast builds are the measured
-    # regression (session.py's PER_ROUND_BCAST_CEILING_ROWS note), so
-    # the loop rides co-partitioning instead: edges pinned by u ONCE,
-    # the label state re-pinned hash(doc_id, N) each round
-    # (session.pinned_state_cache -- the per-round localCheckpoint
-    # erased the partitioning the step join's output already had).
-    # Round plan past the ceiling: labels-onto-edges is a
-    # zero-exchange zero-sort SMJ, groupBy(v) is the ONE O(nodes)
-    # exchange, and the step left-join re-uses hash(doc_id,N) ==
-    # hash(v,N) on both sides. The old lane shuffled the labels and
-    # the nbr_min side every round on top of it.
-    pinned_state = n_docs >= PER_ROUND_BCAST_CEILING_ROWS
-
-    def node_side_hint(df):
-        return df if pinned_state else F.broadcast(df)
-
-    labels = docs.select("doc_id", F.col("doc_id").alias("component"))
-    if pinned_state:
-        labels = pinned_partition_cache(labels, "doc_id")
-    state_cache = labels if pinned_state else None
-    try:
+    """The distributed lane of neardup_components over the kept
+    ``(u, v)`` pairs. Past the lane's ceiling the round plan is
+    co-partitioned: labels-onto-edges is a zero-exchange zero-sort
+    SMJ, groupBy(v) is the ONE O(nodes) exchange, and the step
+    left-join re-uses hash(doc_id, N) == hash(v, N) on both sides."""
+    with RoundLane(docs.count()) as lane:
+        (edges,) = lane.static(
+            kept.union(kept.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            "u",
+        )
+        labels = lane.start(
+            docs.select("doc_id", F.col("doc_id").alias("component")), "doc_id"
+        )
         for _ in range(max_iter):
             nbr_min = (
-                edges.join(
-                    node_side_hint(labels), edges["u"] == labels["doc_id"]
-                )
+                edges.join(lane.small(labels), edges["u"] == labels["doc_id"])
                 .groupBy("v")
                 .agg(F.min("component").alias("nbr_component"))
             )
             stepped = labels.join(
-                node_side_hint(nbr_min),
-                labels["doc_id"] == nbr_min["v"],
-                "left",
+                lane.small(nbr_min), labels["doc_id"] == nbr_min["v"], "left"
             ).select(
                 "doc_id",
                 F.least(
@@ -629,27 +581,11 @@ def _hash_to_min_rounds(
                     < F.col("component")
                 ).alias("changed"),
             )
-            if pinned_state:
-                # materialize the new state BEFORE dropping the old
-                # cache it reads from, then swap
-                stepped = pinned_state_cache(stepped, "doc_id")
-                state_cache.unpersist()
-                state_cache = stepped
-            else:
-                stepped = stepped.localCheckpoint()
+            stepped = lane.step(stepped, "doc_id")
             labels = stepped.select("doc_id", "component")
             if stepped.agg(F.max("changed")).first()[0] is not True:
-                break
-        else:
-            raise _not_converged(max_iter)
-        if pinned_state:
-            # eager copy OFF the final round's cache: the return value
-            # must not depend on a cache the finally below drops
-            labels = labels.localCheckpoint()
-        return labels
-    finally:
-        if state_cache is not None:
-            state_cache.unpersist()
+                return lane.detach(labels)
+        raise _not_converged(max_iter)
 
 
 def contamination_screen(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dedup import jaccard, set_overlap
+from ..session import RoundLane
 
 
 def team_seed(team_member: DataFrame, team_id: str) -> DataFrame:
@@ -401,6 +402,23 @@ def hop_counts(edges: DataFrame, seeds: DataFrame, k: int = 2) -> DataFrame:
     return row.select(*[f"hop{i}_count" for i in range(1, k + 1)])
 
 
+def _node_universe(edges: DataFrame, op: str) -> tuple[DataFrame, int]:
+    """The ranking family's node set -- every src and dst, once --
+    materialized, and its size. An empty edge table raises a named
+    ``ValueError`` (``op`` names the operator) instead of a bare
+    ZeroDivisionError from ``1.0 / n`` before any Spark job runs."""
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .dropDuplicates(["node"])
+        .localCheckpoint()
+    )
+    n = nodes.count()
+    if n == 0:
+        raise ValueError(f"{op}: empty edge table (no nodes)")
+    return nodes, n
+
+
 def _pagerank_rounds(
     base: DataFrame,
     ranks: DataFrame,
@@ -425,72 +443,16 @@ def _pagerank_rounds(
     rank/om joins onto the edges and aggregates
     ``in_share_val(share_col)`` by dst -> ``update_expr()`` (reads
     columns mass / in_share plus whatever ``base`` carries) rebuilds
-    the state -- which is referenced three times next round, so each
-    round localCheckpoints (measured faster than every-3rd here).
+    the state, which the next round reads three times.
 
-    Partitioning contract (the 100x soak's dominant term): ``e`` and
-    ``out_mass`` are materialized ONCE, and the per-round join never
-    touches the edge table beyond a scan. Under the per-round
-    broadcast ceiling the share side is broadcast EXPLICITLY (the
-    hint matters: ranks are checkpointed, their LogicalRDD carries no
-    size stats, so the static planner never broadcasts unaided, and
-    AQE's runtime conversion still writes the edge side's map-side
-    shuffle files first) over cheap serialized checkpoints. At or
-    past it (round 12, VERDICT r11 #6): the edge table becomes a
-    partition+order pinned cache keyed src, the rank STATE is pinned
-    hash(node, N) each round (session.pinned_state_cache -- per-round
-    ``localCheckpoint`` erased the partitioning the round plan
-    already had), and the whole round is co-partitioned: the share
-    projection inherits hash(src) from the state, the edges SMJ is
-    zero-exchange zero-sort, the contribs groupBy(dst) is the ONE
-    O(nodes) exchange, and the rebuild left-join re-uses both sides'
-    hash(node, N). Before any of this, every round re-shuffled the
-    EDGE table by src and re-computed+re-shuffled out_mass from
-    scratch (checkpointed ranks start a fresh plan per round, so no
-    cross-round stage reuse) -- at 100 TB the edge re-exchange is
-    the whole job."""
-    from ..session import (
-        PER_ROUND_BCAST_CEILING_ROWS,
-        iterative_loop_side,
-        pinned_state_cache,
-    )
-
+    How the edges and the state are materialized, and which side
+    broadcasts, is session.RoundLane's policy, picked from the node
+    count: the edge table is materialized ONCE (keyed src), so the
+    per-round join never touches it beyond a scan."""
     # node-universe size decides the lane (callers that already counted
     # pass it; base is one row per node, so the fallback count is exact)
     if n_nodes is None:
         n_nodes = base.count()
-    # Lane boundary (round 12): ONE flag. Under the per-round broadcast
-    # ceiling, the node tables broadcast explicitly (checkpointed
-    # frames' LogicalRDDs carry no size stats, so the static planner
-    # never broadcasts them unaided, and leaving it to AQE's runtime
-    # conversion still writes the other side's map-side shuffle files
-    # first) over a cheap serialized edge checkpoint. At or past it,
-    # per-round broadcast builds are a measured regression (193 ->
-    # 291 s at 1.5M nodes, session.PER_ROUND_BCAST_CEILING_ROWS note)
-    # -- so instead of broadcasting ANY side, the whole round rides
-    # co-partitioning: the edge table is partition+order pinned by src
-    # ONCE, and the rank state is re-pinned by node each round via
-    # session.pinned_state_cache (an AQE-off localCheckpoint: no
-    # repartition -- the round plan's output is already hash(node, N),
-    # only an ADAPTIVE checkpoint erases that -- and the lineage cut
-    # is load-bearing: the round reads the state three ways, so an
-    # un-truncated plan grows ~3^k and OOM'd the driver during cache
-    # canonicalization on the 1000x soak). Round plan past the
-    # ceiling: state->share rides
-    # hash(node)=hash(src) into a zero-exchange zero-sort SMJ with the
-    # pinned edges; groupBy(dst) is the round's ONE O(nodes) exchange;
-    # the rebuild left-join is zero-exchange (state pinned + contribs
-    # agg output both hash(node, N)). The old lane shuffled share, the
-    # rebuild state AND the contribs every round -- 3 exchanges -> 1.
-    pinned_state = n_nodes >= PER_ROUND_BCAST_CEILING_ROWS
-    e = iterative_loop_side(
-        e,
-        "src",
-        small_side_rows=n_nodes,
-        pin_at_rows=PER_ROUND_BCAST_CEILING_ROWS,
-    )
-    bcast_share = not pinned_state
-    bcast_rebuild = not pinned_state
     # The rank STATE carries om (and base's extra columns) through
     # every round: out_mass is static, so joining it per round
     # (the first cut's `ranks.join(out_mass)`) paid a node-table
@@ -506,17 +468,9 @@ def _pagerank_rounds(
         .join(ranks, "node")
         .select(*state_cols, "rank")
     )
-    cur = None
-    try:
-        if pinned_state:
-            from ..session import pinned_partition_cache
-
-            # one upfront repartition establishes hash(node, N); every
-            # later round PRESERVES it by construction and re-pins with
-            # pinned_state_cache (no further repartition ever)
-            cur = pinned_partition_cache(state0, "node")
-        else:
-            cur = state0.localCheckpoint()
+    with RoundLane(n_nodes) as lane:
+        (e,) = lane.static(e, "src")
+        cur = lane.start(state0, "node")
         for _ in range(n_iter):
             dangling = cur.filter(F.col("om").isNull()).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
@@ -526,53 +480,20 @@ def _pagerank_rounds(
                 (F.col("rank") / F.col("om")).alias("share"),
             )
             contribs = (
-                e.join(
-                    F.broadcast(share) if bcast_share else share,
-                    "src",
-                )
+                e.join(lane.small(share), "src")
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.sum(in_share_val(F.col("share"))).alias("in_share"))
             )
             # rebuild from the state frame; contribs is O(active dst
-            # nodes) <= n_nodes. The broadcast gate here is TIGHTER
-            # than share's: share's broadcast protects the O(edges)
-            # side from a per-round re-shuffle (worth paying for up to
-            # the 64MB ceiling), while this one only replaces a
-            # shuffle of two O(nodes) sides -- and a fresh 1.5M-row
-            # driver-side broadcast build every round measured 193 ->
-            # 291 s on the 1000x pagerank soak (session.py's
-            # PER_ROUND_BCAST_CEILING_ROWS note).
+            # nodes) <= n_nodes
             nxt = (
                 cur.drop("rank")
-                .join(
-                    F.broadcast(contribs) if bcast_rebuild else contribs,
-                    "node",
-                    "left",
-                )
+                .join(lane.small(contribs), "node", "left")
                 .crossJoin(F.broadcast(dangling))
                 .select(*state_cols, update_expr().alias("rank"))
             )
-            if pinned_state:
-                # materialize the new state BEFORE dropping the old
-                # cache it reads from, then swap
-                nxt = pinned_state_cache(nxt, "node")
-                cur.unpersist()
-                cur = nxt
-            else:
-                cur = nxt.localCheckpoint()
-        out = cur.select("node", "rank")
-        if pinned_state:
-            # eager copy OFF the final round's cache: the return value
-            # must not depend on a cache the finally below drops
-            out = out.localCheckpoint()
-        return out
-    finally:
-        # the per-round checkpoints materialized every consumer; the
-        # driver certifies 270+ queries in one session, so a pinned
-        # cache must not outlive its loop (no-op on the checkpoint lane)
-        e.unpersist()
-        if pinned_state and cur is not None:
-            cur.unpersist()
+            cur = lane.step(nxt, "node")
+        return lane.detach(cur.select("node", "rank"))
 
 
 def pagerank(
@@ -593,18 +514,7 @@ def pagerank(
     edge table is the reused, cache-worthy side and ranks are 2 columns
     per node. Fixed iteration count (deterministic plan); rows-only
     check (float accumulation order is engine-specific)."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates(["node"])
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        # loud, named failure (personalized_pagerank's empty-seed
-        # pattern): 1.0 / n below would raise a bare
-        # ZeroDivisionError before any Spark job runs
-        raise ValueError("pagerank: empty edge table (no nodes)")
+    nodes, n = _node_universe(edges, "pagerank")
     out_deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("om")
     )
@@ -612,8 +522,8 @@ def pagerank(
         base=nodes,
         ranks=nodes.select("node", F.lit(1.0 / n).alias("rank")),
         out_mass=out_deg,
-        # raw projection: _pagerank_rounds owns the one-time
-        # repartition-by-src + checkpoint of the edge side
+        # raw projection: _pagerank_rounds' lane materializes the
+        # edge side once
         e=edges.select("src", "dst"),
         n_iter=n_iter,
         n_nodes=n,
@@ -843,86 +753,49 @@ def hits(
     the dangling-mass scalar in ``pagerank``).
 
     Scale shape per round: two edge-keyed hash aggs (in-sum, out-sum)
-    + two 1-row broadcast normalizations; lineage cut per round.
+    + two 1-row broadcast normalizations; lineage cut per round. How
+    the edges and the vectors are materialized, and whether the
+    vectors broadcast, is session.RoundLane's policy.
     Fixed ``n_iter`` keeps the operator deterministic so the oracle
     can unroll the identical rounds as chained CTEs, 6-dp rounded --
     the same discipline as the PageRank oracles. Sequential
     dependence note: auth updates from h_{i-1}, hub from the FRESH
     auth (classic Kleinberg ordering), mirrored term-for-term in the
     oracle."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates(["node"])
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        # loud, named failure -- the ranking family's convention
-        # (pagerank/weighted_pagerank raise on empty input; silence
-        # here would record 'zero hubs' instead of a bad input)
-        raise ValueError("hits: empty edge table (no nodes)")
-    # Lane gate, the _pagerank_rounds discipline: under the broadcast
-    # ceiling the per-node hub/auth vectors broadcast explicitly (the
-    # checkpointed frames carry no stats, so the static planner never
-    # does it unaided) over one cheap serialized checkpoint of the
-    # edges; past it, HITS joins the edge table on BOTH orientations
-    # per round, so each gets its own partition+order pinned copy --
-    # the per-round joins then neither re-exchange nor re-sort the
-    # edge side (session.pinned_partition_cache).
-    from ..session import BROADCAST_CEILING_ROWS, pinned_partition_cache
-
-    small = n < BROADCAST_CEILING_ROWS
-    if small:
-        e_src = e_dst = edges.select("src", "dst").localCheckpoint()
-    else:
-        e_src = pinned_partition_cache(edges.select("src", "dst"), "src")
-        e_dst = pinned_partition_cache(edges.select("src", "dst"), "dst")
-    _bc = F.broadcast if small else (lambda df: df)
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
+    nodes, n = _node_universe(edges, "hits")
     # n_iter=0 degrades to the initial vectors, like pagerank
     auth = nodes.select("node", F.lit(1.0).alias("auth"))
-    try:
+    with RoundLane(n) as lane:
+
+        def half_round(e, vec, by, to, name):
+            # every node's ``name`` score: the sum of ``vec``'s (node,
+            # score) over its edges (joined on ``by``, summed per
+            # ``to``), L1-normalized; ``vec`` holds every node, so it
+            # also carries the node set for the left join
+            sums = (
+                e.join(lane.small(vec.toDF(by, "v")), by)
+                .groupBy(F.col(to).alias("node"))
+                .agg(F.sum("v").alias("v"))
+            )
+            raw = vec.select("node").join(sums, "node", "left").select(
+                "node", F.coalesce(F.col("v"), F.lit(0.0)).alias(name)
+            )
+            tot = raw.agg(F.sum(name).alias("tot"))
+            nxt = raw.crossJoin(F.broadcast(tot)).select(
+                "node", (F.col(name) / F.col("tot")).alias(name)
+            )
+            return lane.step(nxt, "node")
+
+        # the rounds join the edge table on BOTH orientations, so the
+        # lane materializes it once per key
+        e_src, e_dst = lane.static(edges.select("src", "dst"), "src", "dst")
+        hub = lane.start(nodes.select("node", F.lit(1.0).alias("hub")), "node")
         for _ in range(n_iter):
-            in_sum = (
-                e_src.join(
-                    _bc(hub.select(F.col("node").alias("src"), "hub")), "src"
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").alias("v"))
-            )
-            auth_raw = nodes.join(in_sum, "node", "left").select(
-                "node", F.coalesce(F.col("v"), F.lit(0.0)).alias("auth")
-            )
-            a_norm = auth_raw.agg(F.sum("auth").alias("a_tot"))
-            auth = (
-                auth_raw.crossJoin(F.broadcast(a_norm))
-                .select("node", (F.col("auth") / F.col("a_tot")).alias("auth"))
-                .localCheckpoint(eager=False)
-            )
-            out_sum = (
-                e_dst.join(
-                    _bc(auth.select(F.col("node").alias("dst"), "auth")), "dst"
-                )
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("auth").alias("v"))
-            )
-            hub_raw = nodes.join(out_sum, "node", "left").select(
-                "node", F.coalesce(F.col("v"), F.lit(0.0)).alias("hub")
-            )
-            h_norm = hub_raw.agg(F.sum("hub").alias("h_tot"))
-            hub = (
-                hub_raw.crossJoin(F.broadcast(h_norm))
-                .select("node", (F.col("hub") / F.col("h_tot")).alias("hub"))
-                .localCheckpoint(eager=False)
-            )
-        # materialize the final vectors BEFORE the caches they derive
-        # from can be unpersisted (the eager=False round checkpoints
-        # only pin blocks once computed)
+            auth = half_round(e_src, hub, "src", "dst", "auth")
+            hub = half_round(e_dst, auth, "dst", "src", "hub")
+        # one eager copy of the joined vectors: off every cache the
+        # lane drops, and no action on the result re-runs the join
         result = hub.join(auth, "node").localCheckpoint()
-    finally:
-        e_src.unpersist()
-        e_dst.unpersist()
     return result.select(
         "node",
         F.round("hub", round_dp).alias("hub"),
@@ -949,18 +822,7 @@ def weighted_pagerank(
     surfer can't follow a zero-probability edge. The oracle applies
     the identical rule (HAVING SUM(score) > 0 on the out-weight
     table)."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates(["node"])
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        # loud, named failure (personalized_pagerank's empty-seed
-        # pattern): 1.0 / n below would raise a bare
-        # ZeroDivisionError before any Spark job runs
-        raise ValueError("weighted_pagerank: empty edge table (no nodes)")
+    nodes, n = _node_universe(edges, "weighted_pagerank")
     out_w = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(

@@ -13,15 +13,17 @@ Scale notes (100 TB design intent):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Serializes pinned_partition_cache's AQE-off registration window (see
-# its docstring for the restore race two concurrent callers would hit).
+# Serializes the AQE-off pinning window (see _aqe_off for the restore
+# race two concurrent callers would hit).
 _PIN_GUARD = threading.Lock()
 
 
@@ -66,14 +68,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # localCheckpoint blocks (pinned_state_cache, the multi-
-        # consumer lazy checkpoints) are freed by the ContextCleaner
-        # only after a JVM GC observes the dropped reference; the
-        # driver certifies 270+ queries in one session, and without a
+        # localCheckpoint blocks (RoundLane's per-round states, the
+        # multi-consumer lazy checkpoints) are freed by the
+        # ContextCleaner only after a JVM GC observes the dropped
+        # reference -- unpersist() does not reach them; the driver
+        # certifies 270+ queries in one session, and without a
         # periodic GC the dereferenced blocks accumulate until the
-        # next incidental full GC (r12 advice: callers' unpersist()
-        # became a no-op when pinned_state_cache switched from persist
-        # to checkpoint). 5min bounds the float at any scale; soaks
+        # next incidental full GC. 5min bounds the float at any scale; soaks
         # that need tighter reclamation override via
         # SPARK_GRAFT_EXTRA_CONF (tools/graph_soak.py sets 1min).
         .config("spark.cleaner.periodicGC.interval", "5min")
@@ -100,6 +101,32 @@ def get_spark(
     return spark
 
 
+@contextlib.contextmanager
+def _aqe_off(spark):
+    """Plan and materialize with AQE off, so a pinned frame captures the
+    physical plan's concrete HashPartitioning + ordering (an adaptive
+    plan reports UnknownPartitioning to downstream planning).
+
+    The flip is session-global for the window, and the window is
+    serialized under ``_PIN_GUARD``: two CONCURRENT windows would
+    otherwise race the read-modify-write of the conf -- the second
+    reader can observe the first's "false" as the value to restore,
+    leaving the session permanently non-adaptive after both return
+    (and an interleaved restore could pin the second frame with AQE
+    back ON, silently losing its partitioning). A plan an UNRELATED
+    thread compiles during a held window still merely plans
+    non-adaptively (same results; only bench warm-up compiles
+    concurrently, untimed) -- which is why the flip lives in this ONE
+    locked helper instead of scattered per-suite."""
+    with _PIN_GUARD:
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 def pinned_partition_cache(df, *keys: str):
     """Materialize ``df`` hash-partitioned by ``keys`` such that every
     DOWNSTREAM plan in the session SEES the partitioning and skips its
@@ -115,10 +142,10 @@ def pinned_partition_cache(df, *keys: str):
     both verified on 4.1.2 (LogicalRDD.outputPartitioning and
     InMemoryTableScan over an adaptive cached plan), so a
     checkpoint-based loop still exchanges the big side every round.
-    Registering the cache with AQE OFF pins HashPartitioning(keys, N)
-    into the InMemoryRelation; adaptive downstream plans trust a
-    cached scan's partitioning, so the per-round join plans with no
-    Exchange on this side.
+    Registering the cache with AQE OFF (:func:`_aqe_off`) pins
+    HashPartitioning(keys, N) into the InMemoryRelation; adaptive
+    downstream plans trust a cached scan's partitioning, so the
+    per-round join plans with no Exchange on this side.
 
     The cache is ALSO sorted within partitions by ``keys``: pinning
     partitioning alone steers the planner into a sort-merge join
@@ -130,57 +157,26 @@ def pinned_partition_cache(df, *keys: str):
     InMemoryTableScan: the big side is streamed merge-ready, and the
     only per-round work on it is the scan itself.
 
-    The AQE flip is session-global for the registration+materialize
-    window, and the window is serialized under a module lock: two
-    CONCURRENT registrations would otherwise race the read-modify-
-    write of the conf -- the second reader can observe the first's
-    "false" as the value to restore, leaving the session permanently
-    non-adaptive after both return (and an interleaved restore could
-    register the second cache with AQE back ON, silently losing its
-    pinned partitioning). A plan an UNRELATED thread compiles during
-    a held window still merely plans non-adaptively (same results;
-    only bench warm-up compiles concurrently, untimed) -- which is
-    why the flip lives in this ONE locked helper instead of scattered
-    per-suite.
-
-    Callers own ``out.unpersist()`` after their loop (results must be
-    materialized first -- the loops here checkpoint per round, so the
-    returned frame never depends on the cache once the loop exits):
-    the driver certifies 270+ queries in ONE session, and leaked
-    caches would accumulate across all of them.
-    """
+    The caller owns ``out.unpersist()``; in the iterative loops that
+    is :class:`RoundLane`'s exit."""
     spark = df.sparkSession
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _PIN_GUARD:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            out = (
-                df.repartition(n, *keys)
-                .sortWithinPartitions(*keys)
-                .persist()
-            )
-            out.count()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with _aqe_off(spark):
+        out = df.repartition(n, *keys).sortWithinPartitions(*keys).persist()
+        out.count()
     return out
 
 
-# Rows above which a 2-narrow-column per-node table stops fitting the
-# session's 64MB broadcast comfortably -- the lane boundary for
-# iterative_loop_side and the pagerank share-side broadcast hint.
-BROADCAST_CEILING_ROWS = 2_000_000
-
-# Tighter gate for PER-ROUND broadcasts an iterative loop builds fresh
-# each iteration (the pagerank contribs rebuild): a broadcast is a
-# driver-side collect + serialize + ship, and paying it every round is
-# only a win while the table is small. Measured on the 100x/1000x
-# graph soaks (round 11): at 150k nodes the broadcast rebuild beats the
-# node-table SMJ (part of pagerank's -31% at 100x); at 1.5M nodes --
-# still under BROADCAST_CEILING_ROWS -- ten 1.5M-row broadcast builds
-# regressed pagerank 193 -> 291 s at 1000x. The boundary sits between
-# the two measured scales; past it the rebuild joins as a shuffle of
-# two O(nodes) sides, which grows linearly instead.
+# Node count at which an iterative loop stops broadcasting its
+# per-node sides (:class:`RoundLane`'s lane boundary). A broadcast
+# built fresh each round is a driver-side collect + serialize + ship,
+# and paying it every round is only a win while the table is small.
+# Measured on the 100x/1000x graph soaks (round 11): at 150k nodes the
+# broadcast rebuild beats the node-table SMJ (part of pagerank's -31%
+# at 100x); at 1.5M nodes ten 1.5M-row broadcast builds regressed
+# pagerank 193 -> 291 s at 1000x. The boundary sits between the two
+# measured scales; past it the round joins as a shuffle of two
+# O(nodes) sides, which grows linearly instead.
 PER_ROUND_BCAST_CEILING_ROWS = 500_000
 
 
@@ -202,34 +198,33 @@ def pinned_state_cache(df, *keys: str):
     output IS hash(key, N)-partitioned.
 
     Why localCheckpoint and NOT ``persist()`` (the 1000x re-soak
-    find, this round): a persist pins partitioning but does NOT
-    truncate the logical plan, and an iterative round references its
-    state THREE ways (share, dangling mass, rebuild), so the
-    un-truncated plan tree grows ~3^k with round count -- cache
-    registration canonicalizes that tree and the 1000x pagerank soak
-    OOM'd the 16g DRIVER heap inside plan canonicalization around
-    round 7 (java heap space in QueryPlan.doCanonicalize under
-    ``persist``). The AQE-off checkpoint keeps the partitioning
-    contract (verified: two such frames SMJ with 0 exchanges 0 sorts;
-    a groupBy over one plans 0 exchanges; an AQE-ON checkpoint of the
-    same plan needs 1) while cutting the plan back to O(1) per round.
+    find): a persist pins partitioning but does NOT truncate the
+    logical plan, and an iterative round references its state THREE
+    ways (share, dangling mass, rebuild), so the un-truncated plan
+    tree grows ~3^k with round count -- cache registration
+    canonicalizes that tree and the 1000x pagerank soak OOM'd the 16g
+    DRIVER heap inside plan canonicalization around round 7 (java
+    heap space in QueryPlan.doCanonicalize under ``persist``). The
+    AQE-off checkpoint keeps the partitioning contract (verified: two
+    such frames SMJ with 0 exchanges 0 sorts; a groupBy over one plans
+    0 exchanges; an AQE-ON checkpoint of the same plan needs 1) while
+    cutting the plan back to O(1) per round.
 
     The ``sortWithinPartitions`` is a guarantee, not always a cost:
     where the round plan already reports the order Spark's
     RemoveRedundantSorts elides it; where a BroadcastNestedLoopJoin
     dropped the ordering REPORT the data is still physically
     near-sorted and the sort is an in-partition pass, never an
-    exchange.
+    exchange. The AQE-off window (:func:`_aqe_off`) must cover the
+    checkpoint's plan compilation, which is where the partitioning is
+    captured.
 
-    Same AQE-off window (and ``_PIN_GUARD`` serialization) as
-    pinned_partition_cache -- the flip must cover the checkpoint's
-    plan compilation, which is where the partitioning is captured.
-    Lifecycle: callers' ``unpersist()`` on the returned frame is a
-    no-op (nothing is registered with the cache manager); checkpoint
-    blocks are freed by the ContextCleaner once the round's reference
-    is dropped and the JVM GCs -- the session default sets
-    ``spark.cleaner.periodicGC.interval=5min`` (r13) so long
-    multi-operator sessions reclaim them without per-caller config;
+    Lifecycle: nothing is registered with the cache manager, so there
+    is nothing to unpersist; checkpoint blocks are freed by the
+    ContextCleaner once the round's reference is dropped and the JVM
+    GCs -- the session default sets
+    ``spark.cleaner.periodicGC.interval=5min`` so long multi-operator
+    sessions reclaim them without per-caller config;
     tools/graph_soak.py tightens it further for the 1000x soaks.
 
     Fault tolerance: localCheckpoint stores NON-replicated
@@ -237,61 +232,109 @@ def pinned_state_cache(df, *keys: str):
     the loop unrecoverable (the pre-r12 persist() could recompute from
     lineage). That is the documented trade for the O(1)-per-round plan
     (the 3^k lineage OOM'd the driver first); a deployment that needs
-    executor-loss recovery for multi-hour loops should opt into
-    reliable ``checkpoint()`` (HDFS-backed) at the call sites instead
-    -- same partitioning contract, one extra write."""
-    spark = df.sparkSession
-    with _PIN_GUARD:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            out = df.sortWithinPartitions(*keys).localCheckpoint()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return out
+    executor-loss recovery for multi-hour loops should switch
+    :meth:`RoundLane.step` to reliable ``checkpoint()`` (HDFS-backed)
+    instead -- same partitioning contract, one extra write."""
+    with _aqe_off(df.sparkSession):
+        return df.sortWithinPartitions(*keys).localCheckpoint()
 
 
-def iterative_loop_side(df, *keys: str, small_side_rows: int, pin_at_rows: int | None = None):
-    """Materialize the BIG side of an iterative per-round join, picking
-    the lane by whether the loop's SMALL side (per-node labels/ranks)
-    can broadcast:
+class RoundLane:
+    """The one materialization policy of the distributed iterative
+    loops (``traverse._pagerank_rounds`` for the PageRank family,
+    ``traverse.hits``, ``dedup._hash_to_min_rounds`` for WCC and the
+    near-dup clusterers). The lane is picked ONCE, from the loop's
+    node count against ``PER_ROUND_BCAST_CEILING_ROWS``, and every
+    frame the loop keeps goes through one of its methods::
 
-    - under the ceiling, the small side broadcasts (explicitly or via
-      AQE), so the per-round join never exchanges the big side anyway
-      -- the cheap serialized ``repartition().localCheckpoint()`` wins
-      (the pinned cache's columnar encode + sort measured 1.2-1.7x
-      fixed overhead on sf0.1 in the round-10 interleaved A/B, buying
-      nothing at that scale);
-    - at or past it, broadcast is off the table and only
-      pinned_partition_cache gives a per-round join that neither
-      re-exchanges nor re-sorts the big side (mechanism A/B: -26%
-      steady-state over 8 rounds at 20M edges).
+        with RoundLane(n_nodes) as lane:
+            (e,) = lane.static(edges, "src")
+            cur = lane.start(state0, "node")
+            for _ in range(n_iter):
+                contribs = e.join(lane.small(share(cur)), "src")...
+                cur = lane.step(rebuild(cur, contribs), "node")
+            return lane.detach(cur)
 
-    ``pin_at_rows`` overrides the lane boundary (default
-    ``BROADCAST_CEILING_ROWS``): the pinned-STATE loops (round 12)
-    stop broadcasting the label/rank side already at
-    ``PER_ROUND_BCAST_CEILING_ROWS``, so their edge side must be
-    pinned from that same boundary for the co-partitioned round plan
-    to hold.
+    Under the ceiling the per-node sides broadcast explicitly
+    (:meth:`small`; checkpointed frames' LogicalRDDs carry no size
+    stats, so the static planner never broadcasts them unaided, and
+    AQE's runtime conversion still writes the other side's map-side
+    shuffle files first). The static side is then one cheap
+    serialized ``localCheckpoint`` shared by every join key (a pinned
+    cache's columnar encode + sort measured 1.2-1.7x fixed overhead at
+    sf0.1 in the round-10 A/B, buying nothing while the other side
+    broadcasts), and every state is an eager ``localCheckpoint``.
 
-    Either return value accepts ``.unpersist()`` in the caller's
-    finally (a no-op on the checkpoint lane -- a localCheckpoint's
-    blocks are freed by ContextCleaner only after JVM GC observes the
-    dropped reference). Sessions that run MANY iterative operators
-    back-to-back at large scale should therefore set an aggressive
-    ``spark.cleaner.periodicGC.interval`` (and may force
-    ``System.gc()`` between operators): three pagerank variants'
-    retained ~GB edge checkpoints OOM'd a 16g heap at 1000x before
-    tools/graph_soak.py did exactly that (round-11 session)."""
-    boundary = (
-        BROADCAST_CEILING_ROWS if pin_at_rows is None else pin_at_rows
-    )
-    if small_side_rows < boundary:
-        # no repartition: the partitioning would not survive the
-        # checkpoint under AQE anyway (UnknownPartitioning), so the
-        # shuffle would be pure build-time waste on this lane
-        return df.localCheckpoint()
-    return pinned_partition_cache(df, *keys)
+    At or past it, per-round broadcast builds are the measured
+    regression (the ceiling's note), so the whole round rides
+    co-partitioning instead -- the partitioning contract: the static
+    side is partition+order pinned ONCE per join key
+    (:func:`pinned_partition_cache`), the first state is pinned
+    hash(key, N) by :meth:`start`, and each later state is re-pinned
+    by :meth:`step` (:func:`pinned_state_cache`: no repartition, the
+    round plan's output is already hash(key, N)). A pagerank round
+    then plans state -> share riding hash(node) = hash(src) into a
+    zero-exchange zero-sort SMJ with the pinned edges, one O(nodes)
+    exchange for groupBy(dst), and a zero-exchange rebuild left-join
+    -- before the pins every round re-shuffled the EDGE table, which
+    at 100 TB is the whole job, and the share, state and contribs
+    sides on top of it.
+
+    Lifecycle: ``start``'s cache is dropped once round 1 has
+    materialized; :meth:`detach` copies the returned frame off every
+    cache; leaving the ``with`` unpersists every cache the lane made
+    (the driver certifies 270+ queries in one session, so no pinned
+    cache may outlive its loop). Checkpoint blocks are not caches:
+    the ContextCleaner frees them after a JVM GC (get_spark's
+    periodicGC interval)."""
+
+    def __init__(self, n_nodes: int):
+        self._pinned = n_nodes >= PER_ROUND_BCAST_CEILING_ROWS
+        self._static: list = []
+        self._first = None
+
+    def __enter__(self) -> "RoundLane":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in [*self._static, self._first]:
+            if df is not None:
+                df.unpersist()
+
+    def static(self, df, *keys: str) -> tuple:
+        """``df`` materialized once per join key, in ``keys`` order."""
+        if not self._pinned:
+            # no repartition: under AQE the partitioning would not
+            # survive the checkpoint anyway (UnknownPartitioning)
+            return (df.localCheckpoint(),) * len(keys)
+        self._static += [pinned_partition_cache(df, k) for k in keys]
+        return tuple(self._static[-len(keys):])
+
+    def small(self, df):
+        """The join hint for a per-node side of a round join."""
+        return df if self._pinned else F.broadcast(df)
+
+    def start(self, df, key: str):
+        """The loop's first state, materialized."""
+        if not self._pinned:
+            return df.localCheckpoint()
+        self._first = pinned_partition_cache(df, key)
+        return self._first
+
+    def step(self, df, key: str):
+        """A round's new state, materialized (its lineage cut)."""
+        if not self._pinned:
+            return df.localCheckpoint()
+        out = pinned_state_cache(df, key)
+        if self._first is not None:
+            # round 1 is materialized: nothing reads the first state
+            self._first.unpersist()
+            self._first = None
+        return out
+
+    def detach(self, df):
+        """``df`` made independent of every cache the exit drops."""
+        return df.localCheckpoint() if self._pinned else df
 
 
 def session_stopped(df) -> bool:

@@ -854,47 +854,43 @@ def test_pinned_partition_cache_join_contract(spark):
     InMemoryRelation advertises HashPartitioning + ordering; under
     plain persist/localCheckpoint both report UnknownPartitioning and
     the per-round join re-shuffles -- the round-10 regression class),
-    and iterative_loop_side only pays for the cache past the
-    broadcast ceiling."""
+    and session.RoundLane only pays for pinned caches at the per-round
+    broadcast ceiling, and drops them on exit."""
     import re
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from dgraph_etl_spark.session import (
-        BROADCAST_CEILING_ROWS,
-        iterative_loop_side,
+        PER_ROUND_BCAST_CEILING_ROWS,
+        RoundLane,
         pinned_partition_cache,
     )
 
     # DISTINCT logical plans per probe: the cache manager matches
     # entries by plan equality, so an unpersist of one probe would
-    # silently evict an identical-plan sibling's cache (the loops
-    # unpersist only in their own finally, sequentially, so production
-    # worst-case is a benign recompute -- but the test must not race
-    # itself)
+    # silently evict an identical-plan sibling's cache
     base = spark.range(2000).select(
         (F.col("id") % 97).alias("u"), F.col("id").alias("v")
     )
-    base2 = spark.range(2001).select(
-        (F.col("id") % 97).alias("u"), F.col("id").alias("v")
-    )
-    base3 = spark.range(2002).select(
-        (F.col("id") % 97).alias("u"), F.col("id").alias("v")
+    edges = spark.range(2001).select(
+        (F.col("id") % 97).alias("src"), (F.col("id") % 89).alias("dst")
     )
     pinned = pinned_partition_cache(base, "u")
     try:
-        # lane selection: below the ceiling -> cheap checkpoint (not
-        # cached); at/past it -> the pinned cache
-        cold = iterative_loop_side(base2, "u", small_side_rows=10)
-        assert cold.storageLevel == StorageLevel.NONE, cold.storageLevel
-        hot = iterative_loop_side(
-            base3, "u", small_side_rows=BROADCAST_CEILING_ROWS
-        )
-        try:
-            assert hot.storageLevel != StorageLevel.NONE
-        finally:
-            hot.unpersist()
+        # lane selection: under the ceiling -> one shared cheap
+        # checkpoint for both keys (not cached)
+        with RoundLane(10) as lane:
+            by_src, by_dst = lane.static(edges, "src", "dst")
+            assert by_src is by_dst
+            assert by_src.storageLevel == StorageLevel.NONE, by_src.storageLevel
+        # at the ceiling -> one pinned cache per key, unpersisted when
+        # the with block is left
+        with RoundLane(PER_ROUND_BCAST_CEILING_ROWS) as lane:
+            hot = lane.static(edges, "src", "dst")
+            assert hot[0] is not hot[1]
+            assert all(h.storageLevel != StorageLevel.NONE for h in hot)
+        assert all(h.storageLevel == StorageLevel.NONE for h in hot)
 
         right = spark.range(500).select(
             F.col("id").alias("k"), F.lit(1).alias("w")

@@ -1663,6 +1663,16 @@ FRONTIER_HOP_HOMES = {
 MD5_INT60_HOMES = {", 1, 15": ("md5_int60",)}
 
 
+# The one home of the iterative loops' materialization policy
+# (session.RoundLane): a loop that pins its own edges or state carries
+# its own copy of the lane decision, and the copies drift (hits kept
+# an older ceiling and never re-pinned its state).
+LANE_HOMES = {
+    "pinned_partition_cache(": ("static", "start"),
+    "pinned_state_cache(": ("step",),
+}
+
+
 def _code_lines(src, keep_strings=False):
     """``src``'s lines with comments (and string literals unless
     ``keep_strings``) blanked."""
@@ -1684,10 +1694,11 @@ def _code_lines(src, keep_strings=False):
 def test_ann_steps_live_in_one_helper():
     """Each integer-exact ANN step has one copy, its helper in
     functions/similarity.py, the frontier hop has one, in
-    graph/traverse.out_pairs, and the 60-bit md5 integer hash has one,
-    dedup.md5_int60: a second inline copy (the s17 and c59 suite
-    queries, the DQL uid steps, g21, b72 and s16 used to carry their
-    own) is how the lanes drift."""
+    graph/traverse.out_pairs, the 60-bit md5 integer hash has one,
+    dedup.md5_int60, and the iterative loops' pinning has one,
+    session.RoundLane: a second inline copy (the s17 and c59 suite
+    queries, the DQL uid steps, g21, b72, s16, pagerank, hash-to-min
+    and hits used to carry their own) is how the lanes drift."""
     import ast
     import pathlib
 
@@ -1696,6 +1707,7 @@ def test_ann_steps_live_in_one_helper():
         (ANN_STEP_HOMES, False, {p: (h,) for p, h in ANN_STEP_HOMES.items()}),
         (FRONTIER_HOP_HOMES, True, FRONTIER_HOP_HOMES),
         (MD5_INT60_HOMES, False, MD5_INT60_HOMES),
+        (LANE_HOMES, False, LANE_HOMES),
     ]
     offenders, homed = [], set()
     for path in sorted(pkg.rglob("*.py")):
@@ -1887,16 +1899,19 @@ def test_null_text_contract_fingerprint_winnow_chunk_split(spark):
 
 
 def test_pinned_state_lane_matches_small_lane(spark, monkeypatch):
-    """Round-12 pinned-state loops (pagerank family + hash-to-min):
-    forcing the >= PER_ROUND_BCAST_CEILING_ROWS lane at toy scale must
-    reproduce the small lane's results exactly, leave the session
-    adaptive, and leak no DataFrame cache (the loops swap per-round
-    caches and must unpersist every one)."""
+    """Every loop on session.RoundLane (pagerank, personalized and
+    weighted PageRank, HITS, hash-to-min WCC): forcing the
+    >= PER_ROUND_BCAST_CEILING_ROWS lane at toy scale must actually
+    pin (each operator registers pinned caches), reproduce the small
+    lane's results exactly, leave the session adaptive, and leak no
+    DataFrame cache (the lane must unpersist every cache it made)."""
     import dgraph_etl_spark.session as S
-    from pyspark.sql import functions as F
     from dgraph_etl_spark.graph.traverse import (
+        hits,
         pagerank,
+        personalized_pagerank,
         weakly_connected_components,
+        weighted_pagerank,
     )
 
     # cache-leak probe: only assert emptiness afterwards if OTHER
@@ -1905,42 +1920,61 @@ def test_pinned_state_lane_matches_small_lane(spark, monkeypatch):
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     was_empty = cache_mgr.isEmpty()
 
-    # two cycles + a dangling tail + an isolated pair: exercises
-    # dangling mass, multiple components, and convergence
+    # two cycles + a dangling tail + an isolated pair whose one edge
+    # scores 0 (dangling for weighted_pagerank): exercises dangling
+    # mass, multiple components, and convergence
     edge_rows = (
-        [(str(i), str((i + 1) % 6), 1.0) for i in range(6)]
+        [(str(i), str((i + 1) % 6), 1.0 + i % 3) for i in range(6)]
         + [(str(10 + i), str(10 + (i + 1) % 4), 1.0) for i in range(4)]
-        + [("5", "20", 1.0), ("21", "22", 1.0)]
+        + [("5", "20", 2.0), ("21", "22", 0.0)]
     )
     edges = spark.createDataFrame(edge_rows, ["src", "dst", "score"])
+    seeds = spark.createDataFrame([("0",), ("12",)], ["id"])
 
-    small_pr = {r.node: r.rank for r in pagerank(edges, n_iter=6).collect()}
-    small_cc = {
-        r.node: r.component
-        for r in weakly_connected_components(edges).collect()
+    ops = {
+        "pagerank": lambda: pagerank(edges, n_iter=6),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            edges, seeds, n_iter=6
+        ),
+        "weighted_pagerank": lambda: weighted_pagerank(edges, n_iter=6),
+        "hits": lambda: hits(edges, n_iter=4),
+        "wcc": lambda: weakly_connected_components(edges),
     }
 
+    def run(op):
+        return {r[0]: tuple(r[1:]) for r in ops[op]().collect()}
+
+    small = {op: run(op) for op in ops}
+
+    pins = []
+    real_pin = S.pinned_partition_cache
+
+    def counting_pin(df, *keys):
+        pins.append(keys)
+        return real_pin(df, *keys)
+
+    monkeypatch.setattr(S, "pinned_partition_cache", counting_pin)
     monkeypatch.setattr(S, "PER_ROUND_BCAST_CEILING_ROWS", 1)
-    big_pr = {r.node: r.rank for r in pagerank(edges, n_iter=6).collect()}
-    big_cc = {
-        r.node: r.component
-        for r in weakly_connected_components(edges).collect()
-    }
+    for op in ops:
+        before = len(pins)
+        big = run(op)
+        assert len(pins) > before, f"{op} did not take the pinned lane"
+        assert set(big) == set(small[op]), op
+        if op == "wcc":
+            assert big == small[op]
+            continue
+        # scores are rounded to 6 dp inside the operators; the lanes
+        # regroup the same per-node sums, so values agree to an ulp
+        # before rounding
+        off = [
+            (k, big[k], small[op][k])
+            for k in big
+            if any(abs(b - a) >= 1e-9 for b, a in zip(big[k], small[op][k]))
+        ]
+        assert off == [], (op, off[:5])
 
-    assert set(big_pr) == set(small_pr)
-    # ranks are rounded to 6 dp inside pagerank; the lanes regroup the
-    # same per-dst sums, so values agree to an ulp before rounding
-    assert all(
-        abs(big_pr[k] - small_pr[k]) < 1e-9 for k in small_pr
-    ), sorted(
-        (k, big_pr[k], small_pr[k])
-        for k in small_pr
-        if abs(big_pr[k] - small_pr[k]) >= 1e-9
-    )[:5]
-    assert big_cc == small_cc
-
-    # session left adaptive, and the per-round cache swaps dropped
-    # every DataFrame cache (localCheckpoint blocks are not caches)
+    # session left adaptive, and the lane dropped every DataFrame
+    # cache (localCheckpoint blocks are not caches)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     if was_empty:
         assert cache_mgr.isEmpty()

@@ -28,6 +28,13 @@ from dgraph_etl_spark.graph.traverse import evict_frontier_caches  # noqa: E402
 from dgraph_etl_spark.registry import REGISTRY, _load_suites  # noqa: E402
 from dgraph_etl_spark.session import get_spark  # noqa: E402
 
+# local[8] with 8 shuffle partitions, the test session's conf
+# (tests/conftest.py), whatever SPARK_GRAFT_CPUS says: plans depend on
+# the shuffle partition count (g08 over the 8-way bucketed edges plans
+# 1 exchange at 8 partitions and 2 at 32), and the lockfile test
+# compares its plans with these rows
+AUDIT_CPUS = 8
+
 KEYS = (
     "exch", "bhj", "smj", "shj", "bnlj",
     "expand", "topk", "gsort", "scans", "wsc",
@@ -86,7 +93,9 @@ def parse_audit_md(path: str) -> dict[str, dict[str, int]]:
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="plan_audit")
+    spark = get_spark(
+        app_name="plan_audit", cpus=AUDIT_CPUS, shuffle_partitions=AUDIT_CPUS
+    )
     spark.sparkContext.setLogLevel("ERROR")
     _load_suites()
     rows = []
@@ -114,7 +123,8 @@ def main() -> None:
         "# PLAN_AUDIT (generated by tools/plan_audit.py)",
         "",
         f"Physical-plan feature counts per registered batch query at"
-        f" `{sf}` (local mode, AQE off at explain time). Streaming"
+        f" `{sf}` (local[{AUDIT_CPUS}], {AUDIT_CPUS} shuffle partitions,"
+        " as the test session; AQE off at explain time). Streaming"
         f" queries ({len(skipped)}) are audited by their suite oracles"
         " instead. Each operator counts ONCE (numbered detail headers).",
         "",
